@@ -701,7 +701,8 @@ def main() -> None:
                 # doc_pagerank, documented.
                 from sc_crawler_spark.queries.pipeline import \
                     bm25_pruned_sql
-                from sc_crawler_spark.sinks import postings_store
+                from sc_crawler_spark.sinks import (
+                    artifacts, postings_store)
                 from sc_crawler_spark.tables import load as _bload
                 kw = {"query_stride": 1300}
                 duck_sql = bm25_pruned_sql(1300)
@@ -709,12 +710,12 @@ def main() -> None:
                     "zipf_stride1300_M256_served"
                 bidx = os.path.join(s16_dir, "bm25_index")
                 bdocs = _bload(spark, qdir, "documents")
-                bdigest = postings_store.corpus_digest(
+                bdigest = artifacts.corpus_digest(
                     bdocs, "text", "doc_id")
                 from sc_crawler_spark.queries.pipeline import (
                     _BM25_B, _BM25_K1)
-                if not postings_store.bm25_index_matches(
-                        bidx, bdigest, max_postings=256,
+                if not artifacts.matches(
+                        bidx, "bm25", bdigest, max_postings=256,
                         k1=_BM25_K1, b=_BM25_B, query_stride=13):
                     t0 = time.perf_counter()
                     postings_store.write_bm25_index(
@@ -736,16 +737,16 @@ def main() -> None:
                 from sc_crawler_spark.queries.pipeline import (
                     _BM25_B, _BM25_K1)
                 from sc_crawler_spark.sinks import (
-                    ann_store, postings_store)
+                    ann_store, artifacts, postings_store)
                 from sc_crawler_spark.tables import load as _bload
                 scale.setdefault("variant", {})[name] = \
                     "served_postings+ivf"
                 hidx = os.path.join(s16_dir, "bm25_index_main")
                 hdocs = _bload(spark, qdir, "documents")
-                hdigest = postings_store.corpus_digest(
+                hdigest = artifacts.corpus_digest(
                     hdocs, "text", "doc_id")
-                if not postings_store.bm25_index_matches(
-                        hidx, hdigest, max_postings=256,
+                if not artifacts.matches(
+                        hidx, "bm25", hdigest, max_postings=256,
                         k1=_BM25_K1, b=_BM25_B, query_stride=13):
                     t0 = time.perf_counter()
                     postings_store.write_bm25_index(
@@ -755,10 +756,10 @@ def main() -> None:
                         time.perf_counter() - t0, 3)
                 aidx = os.path.join(s16_dir, "ann_index")
                 hemb = _bload(spark, qdir, "embeddings")
-                adigest = ann_store.embedding_digest(
+                adigest = artifacts.corpus_digest(
                     hemb, "embedding", "vec_id")
-                if not ann_store.ann_index_matches(
-                        aidx, adigest, n_cells=8, iters=2):
+                if not artifacts.matches(
+                        aidx, "ivf", adigest, n_cells=8, iters=2):
                     t0 = time.perf_counter()
                     ann_store.write_ivf_index(
                         hemb, aidx, "embedding", "vec_id",
@@ -782,7 +783,7 @@ def main() -> None:
                 # 1M-vector assignment pass actually costs.
                 from sc_crawler_spark.queries.pipeline import \
                     _ann_ivf_sql
-                from sc_crawler_spark.sinks import ann_store
+                from sc_crawler_spark.sinks import ann_store, artifacts
                 from sc_crawler_spark.tables import load as _bload
                 # r17 (verdict task 3): probe 8 -> 12 after the A/B
                 # (scripts/ab_ivf_probe.py): recall@5 at the 64-cell
@@ -796,10 +797,10 @@ def main() -> None:
                     "x512_cells64_served_ivf_index"
                 aidx = os.path.join(qdir, "ann_index")
                 aemb = _bload(spark, qdir, "embeddings")
-                adigest = ann_store.embedding_digest(
+                adigest = artifacts.corpus_digest(
                     aemb, "embedding", "vec_id")
-                if not ann_store.ann_index_matches(
-                        aidx, adigest, n_cells=64, iters=2):
+                if not artifacts.matches(
+                        aidx, "ivf", adigest, n_cells=64, iters=2):
                     t0 = time.perf_counter()
                     ann_store.write_ivf_index(
                         aemb, aidx, "embedding", "vec_id",
@@ -817,17 +818,13 @@ def main() -> None:
                 # landed pairs (the multi-session cost, not the memo)
                 from sc_crawler_spark.queries.pipeline import (
                     _PAIR_MEMO, _docs_with_clones)
-                from sc_crawler_spark.sinks import index_store
+                from sc_crawler_spark.sinks import artifacts, index_store
                 idx_dir = os.path.join(s16_dir, "dedup_index")
                 corpus = _docs_with_clones(spark, qdir)
-                digest = index_store.corpus_digest(corpus, "text",
-                                                   "doc_id")
-                # layout=2 (r18): shingles id-range-clustered for the
-                # streaming probe's row-group pruning — a pre-r18
-                # artifact rebuilds once (build cost published below)
-                if not index_store.index_matches(
-                        idx_dir, digest, k=3, n_hashes=8, band_rows=2,
-                        threshold=0.5, layout=2):
+                digest = artifacts.corpus_digest(corpus, "text", "doc_id")
+                if not artifacts.matches(
+                        idx_dir, "minhash", digest, k=3, n_hashes=8,
+                        band_rows=2, threshold=0.5):
                     t0 = time.perf_counter()
                     index_store.write_minhash_index(
                         corpus, idx_dir, "text", "doc_id")

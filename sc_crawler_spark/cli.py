@@ -1128,19 +1128,17 @@ def cmd_corpus(spark: SparkSession, lake: str, out: str,
     registry's ``training_corpus_emit`` oracle proves): language gate
     -> quality gate -> cross-doc span removal -> exact dedup of the
     cleaned bytes -> eTLD+1 domain quota. Writes the cleaned TEXT with
-    the manifest under ``<out>/corpus/``, ``_META.json`` LAST (same
-    crash discipline as cmd_index) carrying the parameters and the
+    the manifest under ``<out>/corpus/`` and commits a ``corpus`` meta
+    (sinks/artifacts.py protocol) carrying the parameters and the
     input-corpus digest, so a reader can prove which corpus + knobs
     produced the artifact."""
-    import json as _json
-
     from .queries.curation import emit_training_corpus
-    from .sinks import index_store
+    from .sinks import artifacts
 
     plain = os.path.join(lake, "documents.parquet")
     docs = (spark.read.parquet(plain) if os.path.exists(plain)
             else _read(spark, lake, "documents"))
-    digest = index_store.corpus_digest(
+    digest = artifacts.corpus_digest(
         docs.select("doc_id", "text"), "text", "doc_id")
     # Pass the RESOLVED source through: emit's default loader only
     # reads <lake>/documents.parquet, so on a snapshot-versioned lake
@@ -1150,15 +1148,14 @@ def cmd_corpus(spark: SparkSession, lake: str, out: str,
     emitted = emit_training_corpus(spark, lake, lang=lang,
                                    min_quality=min_quality, quota=quota,
                                    with_text=True, docs=docs)
+    artifacts.begin(out)
     emitted.write.mode("overwrite").parquet(os.path.join(out, "corpus"))
-    landed = spark.read.parquet(os.path.join(out, "corpus"))
-    n = landed.count()
-    chars = landed.agg(F.sum("clean_chars")).first()[0] or 0
-    with open(os.path.join(out, "_META.json"), "w") as f:
-        _json.dump({"input_digest": digest, "lang": lang,
-                    "min_quality": min_quality, "quota": quota,
-                    "n_docs": n, "clean_chars": int(chars)},
-                   f, indent=1, sort_keys=True)
+    n, chars = spark.read.parquet(os.path.join(out, "corpus")).agg(
+        F.count("*"), F.coalesce(F.sum("clean_chars"), F.lit(0))).first()
+    artifacts.commit(out, {"kind": "corpus", "input_digest": digest,
+                           "lang": lang, "min_quality": min_quality,
+                           "quota": quota, "n_docs": n,
+                           "clean_chars": int(chars)})
     print(f"corpus: landed {n} docs ({chars} chars) at {out} "
           f"digest={digest}")
 
@@ -1177,7 +1174,7 @@ def cmd_index(spark: SparkSession, lake: str, out: str,
     rebuilds. Consumers (incremental dedup, the graph queries' shared
     pair source) pick the artifact up via $SC_SPARK_INDEX_DIR after
     proving the digest still matches the corpus in front of them."""
-    from .sinks import index_store
+    from .sinks import artifacts, index_store
 
     plain = os.path.join(lake, f"{table}.parquet")
     if os.path.exists(plain):  # raw lake dir (TESTDATA layout)
@@ -1185,10 +1182,10 @@ def cmd_index(spark: SparkSession, lake: str, out: str,
     else:                      # snapshot-versioned CLI lake table
         df = _read(spark, lake, table)
     df = df.select(id_col, text_col)
-    digest = index_store.corpus_digest(df, text_col, id_col)
+    digest = artifacts.corpus_digest(df, text_col, id_col)
     params = dict(k=k, n_hashes=n_hashes, band_rows=band_rows,
                   threshold=threshold, text_col=text_col, id_col=id_col)
-    if not force and index_store.index_matches(out, digest, **params):
+    if not force and artifacts.matches(out, "minhash", digest, **params):
         n = spark.read.parquet(os.path.join(out, "pairs")).count()
         print(f"index: reuse {out} digest={digest} pairs={n}")
         return
@@ -1231,7 +1228,7 @@ def cmd_bm25_index(spark: SparkSession, lake: str, out: str,
     lexical arm) pick it up via $SC_SPARK_BM25_INDEX_DIR and serve
     BIT-EQUAL to in-plan."""
     from .queries.pipeline import _BM25_B, _BM25_K1
-    from .sinks import postings_store
+    from .sinks import artifacts, postings_store
 
     plain = os.path.join(lake, f"{table}.parquet")
     if os.path.exists(plain):  # raw lake dir (TESTDATA layout)
@@ -1239,10 +1236,10 @@ def cmd_bm25_index(spark: SparkSession, lake: str, out: str,
     else:                      # snapshot-versioned CLI lake table
         df = _read(spark, lake, table)
     df = df.select(id_col, text_col)
-    digest = postings_store.corpus_digest(df, text_col, id_col)
-    if not force and postings_store.bm25_index_matches(
-            out, digest, max_postings=max_postings, text_col=text_col,
-            id_col=id_col, k1=_BM25_K1, b=_BM25_B,
+    digest = artifacts.corpus_digest(df, text_col, id_col)
+    if not force and artifacts.matches(
+            out, "bm25", digest, max_postings=max_postings,
+            text_col=text_col, id_col=id_col, k1=_BM25_K1, b=_BM25_B,
             query_stride=query_stride):
         n = postings_store.load_postings(spark, out).count()
         print(f"bm25index: reuse {out} digest={digest} postings={n}")
@@ -1263,11 +1260,9 @@ def cmd_bm25_index_fold(spark: SparkSession, base: str, batch_lake: str,
     lens) tables — no base text pass — producing a NEW artifact at
     ``out`` bit-equal to a one-shot build over base ∪ batch, keyed by
     the merged union digest. The base stays read-only and true."""
-    from .sinks import postings_store
+    from .sinks import artifacts, postings_store
 
-    meta = postings_store.read_bm25_meta(base)
-    if meta is None:
-        raise SystemExit(f"no complete postings artifact at {base}")
+    meta = artifacts.base_meta(base, "bm25")
     plain = os.path.join(batch_lake, f"{table}.parquet")
     if os.path.exists(plain):
         batch = spark.read.parquet(plain)
@@ -1292,7 +1287,7 @@ def cmd_ann_index(spark: SparkSession, lake: str, out: str,
     hybrid RRF dense arm, contrastive_triplets) pick it up via
     $SC_SPARK_ANN_INDEX_DIR — the opt-in approximate production
     serve; oracle runs stay in-plan."""
-    from .sinks import ann_store
+    from .sinks import ann_store, artifacts
 
     plain = os.path.join(lake, f"{table}.parquet")
     if os.path.exists(plain):
@@ -1300,9 +1295,9 @@ def cmd_ann_index(spark: SparkSession, lake: str, out: str,
     else:
         df = _read(spark, lake, table)
     df = df.select(id_col, vec_col)
-    digest = ann_store.embedding_digest(df, vec_col, id_col)
-    if not force and ann_store.ann_index_matches(
-            out, digest, n_cells=n_cells, iters=iters,
+    digest = artifacts.corpus_digest(df, vec_col, id_col)
+    if not force and artifacts.matches(
+            out, "ivf", digest, n_cells=n_cells, iters=iters,
             vec_col=vec_col, id_col=id_col):
         n = spark.read.parquet(os.path.join(out, "assign")).count()
         print(f"annindex: reuse {out} digest={digest} vectors={n}")
@@ -1329,11 +1324,9 @@ def cmd_ann_index_fold(spark: SparkSession, base: str, batch_lake: str,
     base artifact (sinks/artifacts.delete_artifact, meta-first). The
     flag is the opt-in for that destructive tail; without it the
     command only warns."""
-    from .sinks import ann_store
+    from .sinks import ann_store, artifacts
 
-    meta = ann_store.read_ann_meta(base)
-    if meta is None:
-        raise SystemExit(f"no complete IVF artifact at {base}")
+    meta = artifacts.base_meta(base, "ivf")
     plain = os.path.join(batch_lake, f"{table}.parquet")
     if os.path.exists(plain):
         batch = spark.read.parquet(plain)
@@ -1347,20 +1340,14 @@ def cmd_ann_index_fold(spark: SparkSession, base: str, batch_lake: str,
     # r16 drift trip-wire (r15 verdict task 7): folds never move
     # centroids, so cell balance and centroid fit degrade as the
     # incoming distribution drifts. Warn past threshold — imbalance
-    # >= 1.5x the build-time baseline (or >= 4x flat), or mean
-    # cos-distance-to-centroid up >= 20% — and recommend the periodic
-    # full rebuild that is the documented fix.
-    imb, mcd = folded.get("occupancy_imbalance"), folded.get("mean_cos_dist")
-    b_imb = folded.get("baseline_occupancy_imbalance")
-    b_mcd = folded.get("baseline_mean_cos_dist")
+    # >= 1.5x the build-time baseline, or mean cos-distance-to-centroid
+    # up >= 20% — and recommend the periodic full rebuild that is the
+    # documented fix.
+    imb, mcd = folded["occupancy_imbalance"], folded["mean_cos_dist"]
+    b_imb = folded["baseline_occupancy_imbalance"]
+    b_mcd = folded["baseline_mean_cos_dist"]
     drifted = []
-    # The flat 4.0 floor applies only when the base predates the
-    # baseline stats (pre-r16): an index already >= 4x imbalanced at
-    # BUILD time would otherwise warn on every zero-drift fold. With a
-    # recorded baseline, only the 1.5x-relative check fires.
-    if imb is not None and (
-            (b_imb is None and imb >= 4.0)
-            or (b_imb is not None and imb >= 1.5 * b_imb)):
+    if imb is not None and b_imb is not None and imb >= 1.5 * b_imb:
         drifted.append(f"occupancy_imbalance {imb} (baseline {b_imb})")
     if (mcd is not None and b_mcd is not None and b_mcd > 0
             and mcd >= 1.2 * b_mcd):
@@ -1371,8 +1358,6 @@ def cmd_ann_index_fold(spark: SparkSession, base: str, batch_lake: str,
               + " — recommend a full rebuild (annindex --force) "
                 "instead of further folds")
         if rebuild_if_drifted:
-            from .sinks import artifacts
-
             rebuilt = ann_store.rebuild_ivf_index(
                 spark, base, batch, out,
                 union_digest=folded["digest"])

@@ -1742,33 +1742,27 @@ def _bm25_pruned_postings(toked: DataFrame, max_postings: int) -> DataFrame:
     contribution, so an incremental index must re-derive the pruned
     set from the merged raw statistics, never append to it.
 
-    The IN-PLAN form carries len_d through the tf explode
-    (with_len=True, r17) so the prune tail skips the corpus-wide
-    tf-to-lens SortMergeJoin the exact arm already shed; since r18
-    the artifact build/fold land len_d inside tf too (legacy bases
-    are shimmed from their lens table once, at fold time), so the
-    stored-table prune sheds the same join."""
-    tf, lens = _bm25_corpus_stats(toked, with_len=True)
+    Every form carries len_d through the tf explode so the prune tail
+    skips the corpus-wide tf-to-lens SortMergeJoin; the artifact
+    build/fold land len_d inside tf, so the stored-table prune sheds
+    the same join."""
+    tf, lens = _bm25_corpus_stats(toked)
     return _bm25_prune_from_tf(tf, lens, max_postings)
 
 
 def _bm25_corpus_stats(toked: DataFrame,
-                       query_stride: int | None = 13,
-                       with_len: bool = False) -> tuple:
+                       query_stride: int | None = 13) -> tuple:
     """The text pass: (tf, lens) for the searchable corpus. By the
     retrieval convention, query docs (doc_id % ``query_stride`` == 0)
     are excluded from the index; pass ``query_stride=None`` to index
     every document (arbitrary-lake builds with no held-out query
     set — r16 ADVICE: the stride is a recorded artifact parameter,
-    not a silent constant). tf is the zero-shuffle run-length; lens
-    is row-local. ``with_len=True`` (r17 in-plan; r18 also the
-    artifact build/fold) rides len_d through the tf explode so the
-    prune tail skips its doc_id join; the landed tf format carries
-    len_d since r18, and fold_bm25_index shims a legacy (doc_id,
-    term, tf) base back from its lens table exactly once."""
+    not a silent constant). tf is the zero-shuffle run-length with
+    len_d riding each row, so the prune tail needs no doc_id join;
+    lens is row-local."""
     corpus = (toked if query_stride is None
               else toked.filter(F.col("doc_id") % query_stride != 0))
-    return (_tf_from_toked(corpus, with_len=with_len),
+    return (_tf_from_toked(corpus, with_len=True),
             corpus.select("doc_id", F.size("toks").alias("len_d")))
 
 
@@ -1780,18 +1774,12 @@ def _bm25_prune_from_tf(tf: DataFrame, lens: DataFrame,
     build, and the artifact fold (all three produce bit-identical
     postings for the same raw tables).
 
-    When ``tf`` already carries len_d (the in-plan caller rides it
-    through the tf explode, r17) the corpus-wide tf-to-lens doc_id
-    SortMergeJoin is skipped — same len_d values per row, so every
-    12-decimal contribution and the top-M cut are bit-identical; the
-    stored-table callers (build/fold) pass split tables and keep the
-    join. The 1-row stats aggregate always comes from lens (one
-    row-local pass, no shuffle)."""
+    ``tf`` carries len_d per row (``_bm25_corpus_stats``), so there
+    is no corpus-wide tf-to-lens doc_id join; the 1-row stats
+    aggregate comes from lens (one row-local pass, no shuffle)."""
     stats = lens.agg(
         F.count("*").alias("n_docs"),
         F.sum("len_d").alias("total_len"))
-    if "len_d" not in tf.columns:
-        tf = tf.join(lens, "doc_id")
     dfc = tf.groupBy("term").agg(F.count("*").alias("df"))
     avgdl = (F.col("total_len").cast("double")
              / F.col("n_docs").cast("double"))
@@ -1857,10 +1845,10 @@ def bm25_pruned_retrieval(spark: SparkSession, sf: str,
                            F.slice("toks", 1, 8))).alias("term")))
     idx_dir = _os.environ.get("SC_SPARK_BM25_INDEX_DIR")
     if idx_dir:
-        from ..sinks import postings_store
-        digest = postings_store.corpus_digest(docs, "text", "doc_id")
-        if postings_store.bm25_index_matches(
-                idx_dir, digest, max_postings=max_postings,
+        from ..sinks import artifacts, postings_store
+        digest = artifacts.corpus_digest(docs, "text", "doc_id")
+        if artifacts.matches(
+                idx_dir, "bm25", digest, max_postings=max_postings,
                 k1=_BM25_K1, b=_BM25_B, query_stride=13):
             return postings_store.bm25_topk_served(
                 q_terms, spark, idx_dir, top_k=_BM25_TOP_K)
@@ -2020,10 +2008,10 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     b_rank = None
     bidx = _os.environ.get("SC_SPARK_BM25_INDEX_DIR")
     if bidx:
-        from ..sinks import postings_store
-        digest = postings_store.corpus_digest(docs, "text", "doc_id")
-        if postings_store.bm25_index_matches(
-                bidx, digest, max_postings=_BM25_MAX_POSTINGS,
+        from ..sinks import artifacts, postings_store
+        digest = artifacts.corpus_digest(docs, "text", "doc_id")
+        if artifacts.matches(
+                bidx, "bm25", digest, max_postings=_BM25_MAX_POSTINGS,
                 k1=_BM25_K1, b=_BM25_B, query_stride=13):
             b_rank = (postings_store.bm25_topk_served(
                 q_terms, spark, bidx, top_k=_RRF_DEPTH)
@@ -2046,15 +2034,15 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     v_rank = None
     aidx = _os.environ.get("SC_SPARK_ANN_INDEX_DIR")
     if aidx:
-        from ..sinks import ann_store
-        adigest = ann_store.embedding_digest(emb, "embedding", "vec_id")
+        from ..sinks import ann_store, artifacts
+        adigest = artifacts.corpus_digest(emb, "embedding", "vec_id")
         # r16 (ADVICE): parameter-gate like every other serve — an
         # artifact built at a different spec (e.g. the bench's
         # 64-cell index) changes recall; mismatch falls back to the
         # exact in-plan arm instead of being silently probed.
-        if ann_store.ann_index_matches(aidx, adigest,
-                                       n_cells=_SERVE_IVF_N_CELLS,
-                                       iters=_SERVE_IVF_ITERS):
+        if artifacts.matches(aidx, "ivf", adigest,
+                             n_cells=_SERVE_IVF_N_CELLS,
+                             iters=_SERVE_IVF_ITERS):
             cents, assigned = ann_store.load_ivf_index(spark, aidx)
             # the artifact covers the FULL embedding corpus; the
             # hybrid candidate set excludes query docs — filter the
@@ -2435,13 +2423,13 @@ def contrastive_triplets(spark: SparkSession, sf: str) -> DataFrame:
     top = None
     aidx = _os.environ.get("SC_SPARK_ANN_INDEX_DIR")
     if aidx:
-        from ..sinks import ann_store
-        adigest = ann_store.embedding_digest(emb, "embedding", "vec_id")
+        from ..sinks import ann_store, artifacts
+        adigest = artifacts.corpus_digest(emb, "embedding", "vec_id")
         # r16 (ADVICE): same parameter gate as hybrid_rrf_retrieval —
         # a wrong-spec artifact falls back to the exact in-plan arm.
-        if ann_store.ann_index_matches(aidx, adigest,
-                                       n_cells=_SERVE_IVF_N_CELLS,
-                                       iters=_SERVE_IVF_ITERS):
+        if artifacts.matches(aidx, "ivf", adigest,
+                             n_cells=_SERVE_IVF_N_CELLS,
+                             iters=_SERVE_IVF_ITERS):
             cents, assigned = ann_store.load_ivf_index(spark, aidx)
             top = similarity.ivf_probe_topk(
                 qv, cents,
@@ -3252,10 +3240,10 @@ def _lsh_pair_graph(spark: SparkSession, sf: str) -> DataFrame:
     pairs = None
     idx_dir = os.environ.get("SC_SPARK_INDEX_DIR")
     if idx_dir:
-        from ..sinks import index_store
-        digest = index_store.corpus_digest(corpus, "text", "doc_id")
-        if index_store.index_matches(idx_dir, digest, k=3, n_hashes=8,
-                                     band_rows=2, threshold=0.5):
+        from ..sinks import artifacts, index_store
+        digest = artifacts.corpus_digest(corpus, "text", "doc_id")
+        if artifacts.matches(idx_dir, "minhash", digest, k=3, n_hashes=8,
+                             band_rows=2, threshold=0.5):
             pairs = index_store.load_pair_graph(spark, idx_dir)
     if pairs is None:
         pairs = dedup.minhash_lsh_pairs(
@@ -3288,9 +3276,9 @@ def dedup_incremental_batch(spark: SparkSession, sf: str) -> DataFrame:
     idx = None
     idx_dir = os.environ.get("SC_SPARK_INDEX_DIR")
     if idx_dir:
-        from ..sinks import index_store
-        digest = index_store.corpus_digest(base, "text", "doc_id")
-        if index_store.index_matches(idx_dir, digest, k=3, n_hashes=8):
+        from ..sinks import artifacts, index_store
+        digest = artifacts.corpus_digest(base, "text", "doc_id")
+        if artifacts.matches(idx_dir, "minhash", digest, k=3, n_hashes=8):
             idx = index_store.load_minhash_index(spark, idx_dir)
     if idx is None:
         idx = dedup.minhash_index(base, "text", "doc_id", k=3,
@@ -3860,10 +3848,10 @@ def embed_ann_ivf(spark: SparkSession, sf: str, n_cells: int = 8,
     queries = emb.filter(F.col("vec_id") < 10)
     idx_dir = _os.environ.get("SC_SPARK_ANN_INDEX_DIR")
     if idx_dir:
-        from ..sinks import ann_store
-        digest = ann_store.embedding_digest(emb, "embedding", "vec_id")
-        if ann_store.ann_index_matches(idx_dir, digest,
-                                       n_cells=n_cells, iters=iters):
+        from ..sinks import ann_store, artifacts
+        digest = artifacts.corpus_digest(emb, "embedding", "vec_id")
+        if artifacts.matches(idx_dir, "ivf", digest,
+                             n_cells=n_cells, iters=iters):
             return ann_store.cosine_topk_served(
                 queries, spark, idx_dir, "embedding", "vec_id",
                 k=5, n_probe=n_probe)

@@ -5,11 +5,10 @@ structures IN-PLAN, which is self-contained and oracle-checkable but
 re-pays centroid training + cell assignment in every session that
 retrieves. This store lands the trained structure bronze — exactly the
 multi-session pattern the minhash dedup index established
-(sinks/index_store.py): the artifact is keyed by an order-independent
-content digest of the exact (id, vector) corpus it was built from plus
-its build parameters, a digest/parameter mismatch means rebuild, never
-silent reuse, and the meta file is written LAST so a crashed build
-reads as absent.
+(sinks/index_store.py), under the sinks/artifacts.py contract: the
+artifact is keyed by an order-independent content digest of the exact
+(id, vector) corpus it was built from plus its build parameters, and a
+digest/parameter mismatch means rebuild, never silent reuse.
 
 Layout under one artifact root::
 
@@ -18,8 +17,8 @@ Layout under one artifact root::
                         repartitioned BY cell_id — the inverted lists,
                         co-located so a probe equi-join on cell_id
                         reads only its probed buckets
-    <root>/_META.json   {digest, n_vecs, vec_col, id_col, n_cells,
-                         iters, kind: "ivf"}             # written last
+    <root>/_META.json   {kind: "ivf", digest, n_vecs, vec_col,
+                         id_col, n_cells, iters, drift stats, format}
 
 At 100 TB the assign table is the big artifact (|corpus| rows of
 vector + norm); it is written once per corpus digest and every
@@ -43,33 +42,12 @@ production serve — the doc_pagerank / SC_SPARK_INDEX_DIR doctrine.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .index_store import META_NAME, corpus_digest, invalidate_meta
-
-
-def embedding_digest(df: DataFrame, vec_col: str, id_col: str) -> str:
-    """Order-independent digest of an (id, vector) corpus — the same
-    ``bit_xor(xxhash64(id, vec)) _ count`` fold as
-    index_store.corpus_digest, hashing the ARRAY column directly
-    (xxhash64 folds over the elements). r15: the original form
-    rendered every vector to its canonical string first, which at a
-    1M x 64-dim corpus made the digest scan cost MORE than the probe
-    it was gating (~7 s of the 14.6 s served run in BENCH_r15's first
-    validation); hashing the raw floats cuts the gate to a plain
-    columnar scan. Format-compatible with merge_digests; artifacts
-    keyed under the old string-render digest simply mismatch and
-    rebuild once."""
-    row = df.agg(
-        F.coalesce(
-            F.expr(f"bit_xor(xxhash64({id_col}, {vec_col}))"),
-            F.lit(0).cast("long")).alias("d"),
-        F.count("*").alias("n")).first()
-    return f"{row['d']}_{row['n']}"
+from . import artifacts
 
 
 def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
@@ -78,20 +56,21 @@ def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
 
     Centroids are Lloyd-trained (operators/similarity.
     ivf_train_centroids — the deterministic seeded chain the in-plan
-    queries share), the assignment pass reads the STORED centroids so
-    the landed inverted lists are exactly consistent with the landed
-    centroids, and meta commits last."""
+    queries share), and the assignment pass reads the STORED centroids
+    so the landed inverted lists are exactly consistent with the
+    landed centroids."""
+    artifacts.begin(out)
+    return _land_ivf(df, out, vec_col, id_col, n_cells, iters,
+                     artifacts.corpus_digest(df, vec_col, id_col))
+
+
+def _land_ivf(df: DataFrame, out: str, vec_col: str, id_col: str,
+              n_cells: int, iters: int, digest: str) -> dict:
+    """write_ivf_index's build after ``artifacts.begin``, committed
+    under ``digest``."""
     from ..operators.similarity import (
         as_double, ivf_assign, ivf_train_centroids, norm)
 
-    # invalidate FIRST (r15 ADVICE #3): "meta written LAST so a
-    # crashed build reads as absent" only holds for a fresh dir —
-    # rebuilding over an existing artifact (same corpus, different
-    # n_cells) and crashing after the centroids/assign overwrite
-    # would leave the OLD meta paired with partially NEW data, and
-    # ann_index_matches for the old spec would serve it.
-    invalidate_meta(out)
-    digest = embedding_digest(df, vec_col, id_col)
     meta = {
         "digest": digest, "kind": "ivf",
         "vec_col": vec_col, "id_col": id_col,
@@ -117,9 +96,7 @@ def write_ivf_index(df: DataFrame, out: str, vec_col: str, id_col: str,
     # the fold path compares its post-fold stats against these
     meta |= _drift_stats(
         spark.read.parquet(os.path.join(out, "assign")), cents_stored)
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(meta, f, indent=1, sort_keys=True)
-    return meta
+    return artifacts.commit(out, meta)
 
 
 def _drift_stats(assigned: DataFrame, cents: DataFrame) -> dict:
@@ -170,19 +147,13 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
     distribution drifts — the periodic fix is a full rebuild
     (write_ivf_index), exactly how production IVF systems cycle
     their indexes. Batch ids must be disjoint from the base corpus.
-    ``out`` must be a new directory; meta commits LAST."""
+    ``out`` must be a new directory."""
     from ..operators.similarity import as_double, ivf_assign, norm
-    from .index_store import merge_digests
 
-    if os.path.abspath(out) == os.path.abspath(base_dir):
-        raise ValueError("fold target must be a NEW directory, not "
-                         "the base artifact dir")
-    meta = read_ann_meta(base_dir)
-    if meta is None:
-        raise ValueError(f"no complete IVF artifact at {base_dir}")
-    invalidate_meta(out)
+    meta = artifacts.base_meta(base_dir, "ivf")
+    artifacts.begin(out, base_dir)
     vec_col, id_col = meta["vec_col"], meta["id_col"]
-    batch_digest = embedding_digest(batch, vec_col, id_col)
+    batch_digest = artifacts.corpus_digest(batch, vec_col, id_col)
     cents, base_assigned = load_ivf_index(spark, base_dir)
     c = batch.select(F.col(id_col).alias("neighbor_id"),
                      as_double(F.col(vec_col)).alias("cv"))
@@ -194,7 +165,8 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
      .repartition("cell_id")
      .write.mode("overwrite").parquet(os.path.join(out, "assign")))
     folded = dict(meta,
-                  digest=merge_digests([meta["digest"], batch_digest]),
+                  digest=artifacts.merge_digests([meta["digest"],
+                                                  batch_digest]),
                   n_vecs=meta["n_vecs"] + batch.count())
     # post-fold health over the FOLDED lists (r16 drift trip-wire):
     # baseline_* preserves the BUILD-time numbers the current stats
@@ -202,14 +174,11 @@ def fold_ivf_index(spark: SparkSession, base_dir: str,
     # baseline; callers (cmd_ann_index_fold) warn when the fold
     # drifted past threshold and recommend a rebuild
     for k in ("occupancy_imbalance", "mean_cos_dist"):
-        if k in meta:
-            folded[f"baseline_{k}"] = meta.get(f"baseline_{k}", meta[k])
+        folded[f"baseline_{k}"] = meta.get(f"baseline_{k}", meta[k])
     folded |= _drift_stats(
         spark.read.parquet(os.path.join(out, "assign")),
         spark.read.parquet(os.path.join(out, "centroids")))
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(folded, f, indent=1, sort_keys=True)
-    return folded
+    return artifacts.commit(out, folded)
 
 
 def rebuild_ivf_index(spark: SparkSession, base_dir: str,
@@ -223,8 +192,8 @@ def rebuild_ivf_index(spark: SparkSession, base_dir: str,
     needed; Lloyd retrains from scratch and the fresh build records a
     new drift baseline.
 
-    ``union_digest`` (the fold's merge_digests result) overrides the
-    content hash write_ivf_index computes: the assign store holds
+    ``union_digest`` (the fold's merge_digests result) is the one
+    digest the rebuilt meta commits: the assign store holds
     as_double(vec), whose xxhash64 differs from the original float32
     lake's even though the VALUES are identical (exact widening), so
     the content-derived digest would spuriously mismatch consumers
@@ -232,9 +201,8 @@ def rebuild_ivf_index(spark: SparkSession, base_dir: str,
     digest by construction."""
     from ..operators.similarity import as_double
 
-    meta = read_ann_meta(base_dir)
-    if meta is None:
-        raise ValueError(f"no complete IVF artifact at {base_dir}")
+    meta = artifacts.base_meta(base_dir, "ivf")
+    artifacts.begin(out, base_dir)
     vec_col, id_col = meta["vec_col"], meta["id_col"]
     _cents, base_assigned = load_ivf_index(spark, base_dir)
     union = (base_assigned
@@ -243,33 +211,8 @@ def rebuild_ivf_index(spark: SparkSession, base_dir: str,
              .unionByName(batch.select(
                  F.col(id_col),
                  as_double(F.col(vec_col)).alias(vec_col))))
-    rebuilt = write_ivf_index(union, out, vec_col, id_col,
-                              n_cells=meta["n_cells"],
-                              iters=meta["iters"])
-    rebuilt["digest"] = union_digest
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(rebuilt, f, indent=1, sort_keys=True)
-    return rebuilt
-
-
-def read_ann_meta(out: str) -> dict | None:
-    """The artifact's meta, or None for absent/incomplete builds."""
-    try:
-        with open(os.path.join(out, META_NAME)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def ann_index_matches(out: str, digest: str, **params) -> bool:
-    """True iff a complete IVF artifact at ``out`` was built from
-    exactly the corpus with ``digest`` under exactly ``params``."""
-    meta = read_ann_meta(out)
-    if meta is None or meta.get("digest") != digest:
-        return False
-    if meta.get("kind") != "ivf":
-        return False
-    return all(meta.get(k) == v for k, v in params.items())
+    return _land_ivf(union, out, vec_col, id_col, meta["n_cells"],
+                     meta["iters"], union_digest)
 
 
 def load_ivf_index(spark: SparkSession,

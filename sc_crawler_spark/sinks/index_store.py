@@ -12,15 +12,19 @@ reuse.
 
 Layout under ``<out>/``::
 
-    _META.json    {digest, n_docs, text_col, id_col, k, n_hashes,
-                   band_rows, threshold}
-    shingles/     (id, shingles array<string>)  — Jaccard verify side
+    _META.json    {kind: "minhash", digest, text_col, id_col, k,
+                   n_hashes, band_rows, threshold, format}
+    shingles/     (id, shingles array<string>)  — Jaccard verify side,
+                  range-partitioned and sorted by id so a streaming
+                  probe's candidate-id filter prunes row groups
     signatures/   (id, mh_0..mh_{n-1})          — incremental band probe
     bands/        (id, band, sig)               — LSH buckets, laid out
                   by (band, sig) so bucket joins co-locate
     pairs/        (id_a, id_b, jaccard)         — the verified pair
                   graph every graph consumer (connected components,
                   PageRank, canonical_by_rank) walks
+
+The meta, digest and commit rules are sinks/artifacts.py's.
 
 Reference parity: the reference engine memoizes fetches on disk
 (SURVEY.md §2.13 X3); this is that idea applied to the dedup family's
@@ -30,41 +34,15 @@ engine).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-META_NAME = "_META.json"
-
-
-def invalidate_meta(out: str) -> None:
-    """Delete an existing ``_META.json`` before a (re)build writes any
-    data file (r15 ADVICE #3): "meta written LAST so a crashed build
-    reads as absent" only holds for a fresh directory — rebuilding
-    into a dir that already has a meta (same corpus, new parameters)
-    and crashing after a data overwrite would otherwise leave the OLD
-    meta paired with partially NEW data, and the digest/param gate
-    for the old spec would serve the inconsistent artifact. Shared by
-    every artifact writer (minhash, IVF, postings)."""
-    try:
-        os.remove(os.path.join(out, META_NAME))
-    except FileNotFoundError:
-        pass
-
-
-def corpus_digest(df: DataFrame, text_col: str, id_col: str) -> str:
-    """Order-independent content digest of an (id, text) corpus:
-    ``bit_xor(xxhash64(id, text))`` plus the row count (xor alone would
-    miss duplicated rows canceling out). One column-pruned scan, fixed
-    aggregation state — O(1) memory at any corpus size, and the same
-    rows in any partitioning or arrival order digest identically."""
-    row = df.select(
-        F.expr(f"bit_xor(xxhash64({id_col}, {text_col}))").alias("d"),
-        F.count("*").alias("n"),
-    ).first()
-    return f"{row['d']}_{row['n']}"
+from . import artifacts
+# names kept for perfbench/ and older callers
+from .artifacts import corpus_digest, merge_digests  # noqa: F401
+from .artifacts import read_meta as read_index_meta  # noqa: F401
 
 
 def write_minhash_index(df: DataFrame, out: str, text_col: str,
@@ -74,32 +52,22 @@ def write_minhash_index(df: DataFrame, out: str, text_col: str,
     """Build and land the full dedup index for ``df`` at ``out``.
 
     One shingle pass feeds signatures, bands and the verified pair
-    graph; the meta file is written LAST so a crashed build never
-    presents as a valid artifact (readers key on _META.json)."""
+    graph, committed per the artifacts protocol."""
     from ..operators.dedup import (
         _band_table, _signatures_from_shingles, doc_shingles,
         verified_pairs_from_index)
 
-    invalidate_meta(out)
-    digest = corpus_digest(df, text_col, id_col)
+    artifacts.begin(out)
     meta = {
-        "digest": digest, "kind": "minhash",
-        "text_col": text_col, "id_col": id_col,
+        "digest": artifacts.corpus_digest(df, text_col, id_col),
+        "kind": "minhash", "text_col": text_col, "id_col": id_col,
         "k": k, "n_hashes": n_hashes, "band_rows": band_rows,
         "threshold": threshold,
-        # layout 2 (r18): shingles range-partitioned + sorted by id
-        # for probe-side row-group pruning. Readers that don't care
-        # ignore it; the bench gate keys on it to rebuild old layouts.
-        "layout": 2,
     }
     sh = doc_shingles(df, text_col, id_col, k)
-    # id-range-clustered layout (r18, r17 verdict task 2): the heavy
-    # shingle-array table is written range-partitioned + sorted by id,
-    # so a streaming probe that pushes its (bounded) candidate-id set
-    # into the scan prunes row groups / pages via parquet min-max
-    # stats instead of decoding the whole corpus's arrays. Schema-
-    # compatible with every existing reader; recorded as layout=2 so
-    # the bench gate rebuilds pre-r18 artifacts once.
+    # id-range-clustered: a streaming probe that pushes its (bounded)
+    # candidate-id set into the scan prunes row groups / pages via
+    # parquet min-max stats instead of decoding every shingle array
     (sh.repartitionByRange(F.col(id_col))
      .sortWithinPartitions(id_col)
      .write.mode("overwrite").parquet(os.path.join(out, "shingles")))
@@ -122,29 +90,7 @@ def write_minhash_index(df: DataFrame, out: str, text_col: str,
     pairs = verified_pairs_from_index(sh_stored, bands_stored, id_col,
                                       threshold)
     pairs.write.mode("overwrite").parquet(os.path.join(out, "pairs"))
-
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(meta, f, indent=1, sort_keys=True)
-    return meta
-
-
-def merge_digests(digests: list[str]) -> str:
-    """Combine corpus digests of DISJOINT corpora into the digest of
-    their union — exact by construction, no text needed: the digest is
-    ``bit_xor(xxhash64(id, text)) _ count``, and xor/sum are both
-    associative-commutative-mergeable. This is what makes the streamed
-    index FOLDABLE: each micro-batch lands its own partial digest and
-    the fold proves the union without re-reading one byte of text."""
-    xor, n = 0, 0
-    for d in digests:
-        x, _, c = d.rpartition("_")
-        xor ^= int(x)
-        n += int(c)
-    # wrap to Spark's signed 64-bit bit_xor convention
-    xor &= (1 << 64) - 1
-    if xor >= 1 << 63:
-        xor -= 1 << 64
-    return f"{xor}_{n}"
+    return artifacts.commit(out, meta)
 
 
 def fold_minhash_index(spark: SparkSession, base_dir: str,
@@ -170,19 +116,12 @@ def fold_minhash_index(spark: SparkSession, base_dir: str,
       (every pair has its base x base / cross / intra arbiter exactly
       once).
 
-    ``_META.json`` is written LAST, same crash discipline as the
-    builder. ``out`` must not be the base or stream dir (the fold reads
-    them while writing)."""
+    ``out`` must not be the base or stream dir (the fold reads them
+    while writing)."""
     from ..operators.dedup import _band_table
 
-    norm = [os.path.abspath(d) for d in (base_dir, stream_index_dir)]
-    if os.path.abspath(out) in norm:
-        raise ValueError("fold target must be a NEW directory, not the "
-                         "base or stream index dir")
-    invalidate_meta(out)
-    meta = read_index_meta(base_dir)
-    if meta is None:
-        raise ValueError(f"no complete base index at {base_dir}")
+    meta = artifacts.base_meta(base_dir, "minhash")
+    artifacts.begin(out, base_dir, stream_index_dir, stream_pairs_dir)
     digest_dir = os.path.join(stream_index_dir, "digest")
     try:
         parts = spark.read.parquet(digest_dir).collect()
@@ -190,7 +129,7 @@ def fold_minhash_index(spark: SparkSession, base_dir: str,
         raise ValueError(
             f"stream index at {stream_index_dir} has no digest partials "
             f"(pre-fold stream layout?): {exc}") from None
-    folded_digest = merge_digests(
+    folded_digest = artifacts.merge_digests(
         [meta["digest"]] + [f"{r['d']}_{r['n']}" for r in parts])
     id_col = meta["id_col"]
 
@@ -200,8 +139,7 @@ def fold_minhash_index(spark: SparkSession, base_dir: str,
             os.path.join(stream_index_dir, stream_sub)).drop("batch")
         return base.unionByName(new)
 
-    # same id-range-clustered layout as the builder (r18): the folded
-    # artifact's shingle table stays probe-prunable
+    # same id-range-clustered layout as write_minhash_index
     (_cat("shingles", "shingles")
      .repartitionByRange(F.col(id_col))
      .sortWithinPartitions(id_col)
@@ -224,34 +162,7 @@ def fold_minhash_index(spark: SparkSession, base_dir: str,
      .unionByName(stream_pairs)
      .write.mode("overwrite").parquet(os.path.join(out, "pairs")))
 
-    # the fold rewrites shingles in the clustered layout regardless of
-    # the base's vintage, so the folded meta records layout 2
-    folded = dict(meta, digest=folded_digest, layout=2)
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(folded, f, indent=1, sort_keys=True)
-    return folded
-
-
-def read_index_meta(out: str) -> dict | None:
-    """The artifact's meta, or None when ``out`` holds no (complete)
-    index — a build that died before the final meta write reads as
-    absent, which is the correct answer."""
-    try:
-        with open(os.path.join(out, META_NAME)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def index_matches(out: str, digest: str, **params) -> bool:
-    """True iff a complete artifact at ``out`` was built from exactly
-    the corpus with ``digest`` under exactly ``params`` (k, n_hashes,
-    band_rows, threshold...). The gate every reader must pass before
-    trusting stored pairs."""
-    meta = read_index_meta(out)
-    if meta is None or meta.get("digest") != digest:
-        return False
-    return all(meta.get(k) == v for k, v in params.items())
+    return artifacts.commit(out, dict(meta, digest=folded_digest))
 
 
 def load_minhash_index(spark: SparkSession,

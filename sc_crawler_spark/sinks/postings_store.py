@@ -4,11 +4,10 @@
 rows, but its in-plan form re-pays the index build — tokenize, tf,
 df, per-term top-M impact pruning — every session (measured 57-62 s of
 the ~70 s total at the 512x Zipfian corpus; PLANS.md r14). This store
-lands the pruned postings bronze with the index_store/ann_store
-doctrine: keyed by the order-independent content digest of the exact
+lands the pruned postings bronze under the sinks/artifacts.py
+contract: keyed by the order-independent content digest of the exact
 (id, text) corpus plus build parameters, mismatch means in-plan
-rebuild (never silent reuse), meta written LAST so a crashed build
-reads as absent.
+rebuild (never silent reuse).
 
 Layout::
 
@@ -17,15 +16,13 @@ Layout::
                        posting buckets
     <root>/tf/         parquet (doc_id, term, tf, len_d), term-
                        clustered — the RAW postings the fold path
-                       re-prunes from; len_d rides each row (r18) so
-                       prune/fold skip the corpus-wide doc_id join.
-                       Legacy (pre-r18) artifacts lack len_d — the
-                       fold shims it back from lens exactly once.
-    <root>/lens/       parquet (doc_id, len_d) — 1-row stats source,
-                       n_docs count, legacy-reader compat
-    <root>/_META.json  {digest, n_docs, text_col, id_col,
-                        max_postings, k1, b, query_stride,
-                        idf: "lucene"}
+                       re-prunes from; len_d rides each row so
+                       prune/fold skip the corpus-wide doc_id join
+    <root>/lens/       parquet (doc_id, len_d) — 1-row stats source
+                       and n_docs count
+    <root>/_META.json  {kind: "bm25", digest, n_docs, text_col,
+                        id_col, max_postings, k1, b, query_stride,
+                        idf: "lucene", format}
 
 ``query_stride`` (r16): the retrieval convention holds out query
 docs — rows with doc_id % query_stride == 0 are NOT indexed
@@ -50,20 +47,20 @@ EXACT: idf and avgdl are global, so adding documents changes every
 existing posting's contribution and can reorder any term's top-M; the
 folded artifact is therefore bit-equal to a one-shot build over
 base ∪ batch (pinned in tests), and its digest is the partial-merged
-union digest (index_store.merge_digests), provable without re-reading
+union digest (artifacts.merge_digests), provable without re-reading
 base text.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import dround
-from .index_store import META_NAME, corpus_digest, invalidate_meta
+from . import artifacts
+from .artifacts import read_meta as read_bm25_meta  # noqa: F401
 
 
 def write_bm25_index(df: DataFrame, out: str, text_col: str,
@@ -80,12 +77,6 @@ def write_bm25_index(df: DataFrame, out: str, text_col: str,
         _BM25_B, _BM25_K1, _bm25_corpus_stats, _bm25_prune_from_tf,
         tokens)
 
-    # invalidate FIRST (r15 ADVICE #3): rebuilding into a dir that
-    # already holds a meta and crashing after the postings overwrite
-    # would otherwise leave the OLD meta paired with partially NEW
-    # data — and bm25_index_matches for the old spec would serve the
-    # inconsistent index. Deleting the meta up front restores the
-    # "crashed build reads as absent" invariant for rebuilds too.
     # stride 0 would modulo-by-zero every row to NULL (empty index,
     # landed as "valid"); stride 1 holds out EVERY doc. Both are
     # always caller errors — fail loud, never land a 0-doc artifact.
@@ -94,25 +85,20 @@ def write_bm25_index(df: DataFrame, out: str, text_col: str,
         raise ValueError(
             f"query_stride must be >= 2 or None (got {query_stride}); "
             "None indexes every document")
-    invalidate_meta(out)
-    digest = corpus_digest(df, text_col, id_col)
+    artifacts.begin(out)
+    digest = artifacts.corpus_digest(df, text_col, id_col)
     toked = df.select(F.col(id_col).alias("doc_id"),
                       tokens(F.col(text_col)).alias("toks"))
-    # len_d rides the landed tf (r18, r17 verdict task 3): the doc
-    # length is in hand at explode time, so landing it beside tf lets
-    # the prune tail (and every future fold over this artifact) skip
-    # the corpus-wide tf-to-lens doc_id join the in-plan form already
-    # shed in r17. The lens table still lands — it is the 1-row stats
-    # source and the n_docs count, and legacy readers expect it.
-    tf, lens = _bm25_corpus_stats(toked, query_stride=query_stride,
-                                  with_len=True)
+    # len_d rides the landed tf: the doc length is in hand at explode
+    # time, so landing it beside tf lets the prune tail (and every
+    # fold over this artifact) skip the corpus-wide tf-to-lens join
+    tf, lens = _bm25_corpus_stats(toked, query_stride=query_stride)
     meta = {
         "digest": digest, "kind": "bm25",
         "text_col": text_col, "id_col": id_col,
         "max_postings": max_postings, "idf": "lucene",
         # scoring constants recorded so a constant bump can never
-        # silently serve stale scores (r15 ADVICE #2) — callers gate
-        # on them via bm25_index_matches(k1=..., b=...)
+        # silently serve stale scores — callers gate on k1/b
         "k1": _BM25_K1, "b": _BM25_B,
         # r16 ADVICE: the held-out query-doc convention (doc_id %
         # query_stride == 0 rows are NOT indexed) is a recorded,
@@ -130,9 +116,7 @@ def write_bm25_index(df: DataFrame, out: str, text_col: str,
     post = _bm25_prune_from_tf(tf_stored, lens_stored, max_postings)
     post.repartition("term").write.mode("overwrite").parquet(
         os.path.join(out, "postings"))
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(meta, f, indent=1, sort_keys=True)
-    return meta
+    return artifacts.commit(out, meta)
 
 
 def load_raw(spark: SparkSession, out: str) -> tuple:
@@ -161,36 +145,21 @@ def fold_bm25_index(spark: SparkSession, base_dir: str,
     assumes; a colliding id would double-count its doc in n_docs).
 
     ``out`` must be a new directory (the fold reads base while
-    writing); meta commits LAST, after invalidating any stale one."""
+    writing)."""
     from ..queries.pipeline import (
         _bm25_corpus_stats, _bm25_prune_from_tf, tokens)
-    from .index_store import merge_digests
 
-    if os.path.abspath(out) == os.path.abspath(base_dir):
-        raise ValueError("fold target must be a NEW directory, not "
-                         "the base artifact dir")
-    meta = read_bm25_meta(base_dir)
-    if meta is None:
-        raise ValueError(f"no complete postings artifact at {base_dir}")
-    invalidate_meta(out)
+    meta = artifacts.base_meta(base_dir, "bm25")
+    artifacts.begin(out, base_dir)
     text_col, id_col = meta["text_col"], meta["id_col"]
-    batch_digest = corpus_digest(batch, text_col, id_col)
+    batch_digest = artifacts.corpus_digest(batch, text_col, id_col)
     toked = batch.select(F.col(id_col).alias("doc_id"),
                          tokens(F.col(text_col)).alias("toks"))
-    # the batch inherits the artifact's recorded query-doc stride
-    # (r16 ADVICE) — a fold can never change indexing convention
+    # the batch inherits the artifact's recorded query-doc stride —
+    # a fold can never change indexing convention
     b_tf, b_lens = _bm25_corpus_stats(
-        toked, query_stride=meta.get("query_stride", 13),
-        with_len=True)
+        toked, query_stride=meta["query_stride"])
     base_tf, base_lens = load_raw(spark, base_dir)
-    # legacy-artifact shim (r18): a pre-r18 base landed tf WITHOUT
-    # len_d — reconstruct it from the base lens table once, at fold
-    # time, so the folded artifact is upgraded to the len_d-carrying
-    # format and every later fold over it skips the join for good.
-    # Same len_d values per row, so the re-derived postings are
-    # bit-identical either way (the _bm25_prune_from_tf contract).
-    if "len_d" not in base_tf.columns:
-        base_tf = base_tf.join(base_lens, "doc_id")
     tf = base_tf.unionByName(b_tf)
     lens = base_lens.unionByName(b_lens)
     tf.repartition("term").write.mode("overwrite").parquet(
@@ -202,43 +171,10 @@ def fold_bm25_index(spark: SparkSession, base_dir: str,
                                meta["max_postings"])
     post.repartition("term").write.mode("overwrite").parquet(
         os.path.join(out, "postings"))
-    folded = dict(meta,
-                  digest=merge_digests([meta["digest"], batch_digest]),
-                  # indexed-doc count from the MERGED lens table —
-                  # exact regardless of base provenance (a pre-r16
-                  # base recorded the full df.count() including
-                  # held-out query docs; base-meta + batch would
-                  # inherit that drift)
-                  n_docs=lens_stored.count())
-    with open(os.path.join(out, META_NAME), "w") as f:
-        json.dump(folded, f, indent=1, sort_keys=True)
-    return folded
-
-
-def read_bm25_meta(out: str) -> dict | None:
-    try:
-        with open(os.path.join(out, META_NAME)) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def bm25_index_matches(out: str, digest: str, **params) -> bool:
-    """True iff a complete pruned-postings artifact at ``out`` was
-    built from exactly the corpus with ``digest`` under ``params``."""
-    meta = read_bm25_meta(out)
-    if meta is None or meta.get("digest") != digest:
-        return False
-    if meta.get("kind") != "bm25":
-        return False
-    # A pre-r16 meta lacks the query_stride key; those artifacts were
-    # built with the then-hard-coded %13 hold-out, so missing MUST read
-    # as 13 (mirroring fold_bm25_index) — otherwise requesting
-    # query_stride=None against a legacy artifact would "match" via
-    # None == None and silently serve an index missing every 13th doc.
-    return all(
-        (meta.get(k, 13) if k == "query_stride" else meta.get(k)) == v
-        for k, v in params.items())
+    return artifacts.commit(out, dict(
+        meta, digest=artifacts.merge_digests([meta["digest"],
+                                              batch_digest]),
+        n_docs=lens_stored.count()))
 
 
 def load_postings(spark: SparkSession, out: str) -> DataFrame:

@@ -263,15 +263,16 @@ def _validate_seed_index(seed_index_dir: str | None, k: int,
     a loud ValueError, never silently-incomparable signatures."""
     if seed_index_dir is None:
         return
-    from ..sinks import index_store
-    meta = index_store.read_index_meta(seed_index_dir)
+    from ..sinks import artifacts
+    meta = artifacts.read_meta(seed_index_dir, "minhash") or {}
     want = dict(k=k, n_hashes=n_hashes, text_col=text_col,
                 id_col=id_col)
-    if meta is None or any(meta.get(p) != v for p, v in want.items()):
+    if not artifacts.matches(seed_index_dir, "minhash",
+                             meta.get("digest"), **want):
         raise ValueError(
             f"seed index at {seed_index_dir} missing or built under "
             f"different parameters (want {want}, got "
-            f"{ {p: (meta or {}).get(p) for p in want} })")
+            f"{ {p: meta.get(p) for p in want} })")
 
 
 def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
@@ -288,6 +289,7 @@ def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
     from ..operators.dedup import (
         _band_table, _signatures_from_shingles, doc_shingles,
         incremental_minhash_pairs, verified_pairs_from_index)
+    from ..sinks.artifacts import digest_agg
 
     spark = batch.sparkSession
     sh_dir = os.path.join(index_dir, "shingles")
@@ -348,17 +350,13 @@ def _near_dedup_batch(batch: DataFrame, batch_id: int, pairs_dir: str,
         os.path.join(sh_dir, f"batch={batch_id}"))
     new_sig.write.mode("overwrite").parquet(
         os.path.join(sig_dir, f"batch={batch_id}"))
-    # partial corpus digest (xor of xxhash64(id,text) + count):
-    # what makes the accumulated stream FOLDABLE into a new
-    # digest-keyed artifact (sinks/index_store.fold_minhash_index)
-    # without ever re-reading the batch texts — same overwrite-own-
-    # partition idempotence as the other per-batch writes
-    batch.agg(
-        F.coalesce(  # empty replayed batch: xor identity, not NULL
-            F.expr(f"bit_xor(xxhash64({id_col}, {text_col}))"),
-            F.lit(0).cast("long")).alias("d"),
-        F.count("*").alias("n"),
-    ).write.mode("overwrite").parquet(
+    # partial corpus digest (sinks/artifacts.digest_agg): what makes
+    # the accumulated stream FOLDABLE into a new digest-keyed artifact
+    # (sinks/index_store.fold_minhash_index) without ever re-reading
+    # the batch texts — same overwrite-own-partition idempotence as
+    # the other per-batch writes
+    batch.agg(*digest_agg(text_col, id_col)).write.mode(
+        "overwrite").parquet(
         os.path.join(index_dir, "digest", f"batch={batch_id}"))
     for df_ in (new_sig, new_sh, batch):
         df_.unpersist()

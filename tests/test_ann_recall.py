@@ -162,7 +162,7 @@ def test_ivf_artifact_serves_and_gates(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from sc_crawler_spark.queries.pipeline import embed_ann_ivf
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import ann_store, artifacts
     from sc_crawler_spark.tables import load
 
     sf = "/root/testdata/sf0.001"
@@ -170,11 +170,11 @@ def test_ivf_artifact_serves_and_gates(spark, tmp_path):
     emb = load(spark, sf, "embeddings")
     meta = ann_store.write_ivf_index(emb, out, "embedding", "vec_id",
                                     n_cells=8, iters=2)
-    digest = ann_store.embedding_digest(emb, "embedding", "vec_id")
+    digest = artifacts.corpus_digest(emb, "embedding", "vec_id")
     assert meta["digest"] == digest
-    assert ann_store.ann_index_matches(out, digest, n_cells=8, iters=2)
-    assert not ann_store.ann_index_matches(out, digest, n_cells=16)
-    assert not ann_store.ann_index_matches(out, "bogus_1", n_cells=8)
+    assert artifacts.matches(out, "ivf", digest, n_cells=8, iters=2)
+    assert not artifacts.matches(out, "ivf", digest, n_cells=16)
+    assert not artifacts.matches(out, "ivf", "bogus_1", n_cells=8)
 
     inplan = {(r.query_id, r.neighbor_id): r.cos_sim
               for r in embed_ann_ivf(spark, sf).collect()}
@@ -276,38 +276,6 @@ def test_hybrid_served_fused_overlap(spark, tmp_path):
     assert ov >= 0.6, f"served hybrid fusion drifted too far: {ov:.3f}"
 
 
-def test_ivf_rebuild_crash_invalidates_stale_meta(spark, tmp_path,
-                                                  monkeypatch):
-    """r15 advice #3: rebuilding an IVF artifact into a dir that
-    already holds a complete one deletes the OLD meta before any data
-    overwrite, so a crash mid-rebuild (same corpus, different n_cells)
-    reads as absent — never old-meta paired with partially-new data."""
-    from sc_crawler_spark.sinks import ann_store
-    from sc_crawler_spark.tables import load
-
-    sf = "/root/testdata/sf0.001"
-    out = str(tmp_path / "ivf_idx")
-    emb = load(spark, sf, "embeddings")
-    ann_store.write_ivf_index(emb, out, "embedding", "vec_id",
-                              n_cells=4, iters=1)
-    digest = ann_store.embedding_digest(emb, "embedding", "vec_id")
-    assert ann_store.ann_index_matches(out, digest, n_cells=4, iters=1)
-
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash during rebuild")
-
-    import sc_crawler_spark.operators.similarity as sim
-    monkeypatch.setattr(sim, "ivf_train_centroids", _boom)
-    try:
-        ann_store.write_ivf_index(emb, out, "embedding", "vec_id",
-                                  n_cells=8, iters=2)
-    except RuntimeError:
-        pass
-    assert not ann_store.ann_index_matches(out, digest,
-                                           n_cells=4, iters=1)
-    assert ann_store.read_ann_meta(out) is None
-
-
 def test_ivf_fold_equals_union_assignment(spark, tmp_path):
     """r15: folding a vector batch into a landed IVF artifact (assign
     against the STORED centroids, no retrain) must be bit-equal to
@@ -321,7 +289,7 @@ def test_ivf_fold_equals_union_assignment(spark, tmp_path):
 
     from sc_crawler_spark.operators.similarity import (
         as_double, ivf_assign, ivf_probe_topk, norm)
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import ann_store, artifacts
     from sc_crawler_spark.tables import load
 
     sf = "/root/testdata/sf0.001"
@@ -334,11 +302,11 @@ def test_ivf_fold_equals_union_assignment(spark, tmp_path):
                               n_cells=4, iters=1)
     folded = ann_store.fold_ivf_index(spark, base_dir, batch, fold_dir)
 
-    assert folded["digest"] == ann_store.embedding_digest(
+    assert folded["digest"] == artifacts.corpus_digest(
         emb, "embedding", "vec_id")
     assert folded["n_vecs"] == emb.count()
-    assert ann_store.ann_index_matches(
-        fold_dir, folded["digest"], n_cells=4, iters=1)
+    assert artifacts.matches(
+        fold_dir, "ivf", folded["digest"], n_cells=4, iters=1)
 
     # folded inverted lists == union corpus assigned against the BASE
     # centroids (deterministic dot-product argmax -> bit-equal cells)

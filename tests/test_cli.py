@@ -418,7 +418,7 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     MISMATCHED digest is ignored, never trusted."""
     from sc_crawler_spark.queries.pipeline import (
         _PAIR_MEMO, _docs_with_clones, _lsh_pair_graph)
-    from sc_crawler_spark.sinks import index_store
+    from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark import tables
 
     lake = str(tmp_path / "lake")
@@ -440,11 +440,11 @@ def test_index_build_reuse_rebuild_and_consumers(spark, tmp_path, capsys,
     assert [(r.id_a, r.id_b) for r in stored] == [(1, 2)]
 
     # idempotent re-run: digest matches, nothing rebuilt
-    mtime = os.path.getmtime(os.path.join(out, index_store.META_NAME))
+    mtime = os.path.getmtime(os.path.join(out, artifacts.META_NAME))
     cli.cmd_index(spark, lake, out)
     assert "reuse" in capsys.readouterr().out
     assert os.path.getmtime(
-        os.path.join(out, index_store.META_NAME)) == mtime
+        os.path.join(out, artifacts.META_NAME)) == mtime
 
     # consumer: the pair-graph memo reads the artifact when the digest
     # matches ITS corpus. Build the index over the CLONE corpus (what
@@ -687,7 +687,7 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     test_ann_recall; this is the CLI wiring + reuse discipline)."""
     import pytest as _pytest
 
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import ann_store, artifacts
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -700,7 +700,7 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     cli.main(["annindex", "--lake", lake, "--out", out,
               "--n-cells", "4", "--iters", "1"])
     assert "built" in capsys.readouterr().out
-    meta = ann_store.read_ann_meta(out)
+    meta = artifacts.read_meta(out)
     assert meta["n_cells"] == 4 and meta["kind"] == "ivf"
 
     cli.main(["annindex", "--lake", lake, "--out", out,
@@ -709,7 +709,7 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     cli.main(["annindex", "--lake", lake, "--out", out,
               "--n-cells", "2", "--iters", "1"])
     assert "built" in capsys.readouterr().out
-    assert ann_store.read_ann_meta(out)["n_cells"] == 2
+    assert artifacts.read_meta(out)["n_cells"] == 2
 
     lake2 = str(tmp_path / "lake2")
     os.makedirs(lake2)
@@ -721,7 +721,7 @@ def test_annindex_build_reuse_fold_cli(spark, tmp_path, capsys):
     cli.main(["annindex", "--fold", lake2, "--base", out,
               "--out", folded])
     assert "folded" in capsys.readouterr().out
-    assert ann_store.read_ann_meta(folded)["n_vecs"] == 42
+    assert artifacts.read_meta(folded)["n_vecs"] == 42
 
     with _pytest.raises(SystemExit):
         cli.main(["annindex", "--out", out])
@@ -794,7 +794,7 @@ def test_annindex_fold_drift_tripwire(spark, tmp_path, capsys):
     the build-time baseline), and `annindex --fold` WARNS and
     recommends a rebuild when a drifted batch trips the thresholds —
     folds never move centroids, so this is the staleness trip-wire."""
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import ann_store, artifacts
 
     # base: two tight clusters -> balanced cells, small cos-distance
     rows = [(i, [1.0, 0.05 * (i % 3), 0.0, 0.0]) for i in range(10)]
@@ -824,7 +824,7 @@ def test_annindex_fold_drift_tripwire(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "WARNING centroid drift" in out and "rebuild" in out
 
-    fmeta = ann_store.read_ann_meta(folded_dir)
+    fmeta = artifacts.read_meta(folded_dir)
     assert fmeta["baseline_occupancy_imbalance"] == \
         meta["occupancy_imbalance"]
     assert fmeta["occupancy_imbalance"] >= \
@@ -853,7 +853,7 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     centroids actually FIT the drifted distribution), the rebuilt
     meta keeps the fold's merged union digest, and the superseded
     base artifact is pruned (meta-first delete)."""
-    from sc_crawler_spark.sinks import ann_store
+    from sc_crawler_spark.sinks import ann_store, artifacts
 
     # base: two tight clusters (same fixture as the trip-wire test)
     rows = [(i, [1.0, 0.05 * (i % 3), 0.0, 0.0]) for i in range(10)]
@@ -883,7 +883,7 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     assert "rebuilt" in printed and "pruned superseded base" in printed
 
     # the rebuild landed at the stored spec with a FRESH baseline …
-    rmeta = ann_store.read_ann_meta(out)
+    rmeta = artifacts.read_meta(out)
     assert rmeta is not None and rmeta["n_cells"] == 2
     assert "baseline_occupancy_imbalance" not in rmeta
     # … its retrained centroids fit the drifted distribution: the
@@ -896,10 +896,10 @@ def test_annindex_rebuild_if_drifted(spark, tmp_path, capsys):
     union = spark.read.parquet(
         os.path.join(lake, "embeddings.parquet")).unionByName(
         spark.read.parquet(os.path.join(lake2, "embeddings.parquet")))
-    udigest = ann_store.embedding_digest(union, "embedding", "vec_id")
+    udigest = artifacts.corpus_digest(union, "embedding", "vec_id")
     assert rmeta["digest"] == udigest
     # … and the superseded base is gone (meta-first: absent either way)
-    assert ann_store.read_ann_meta(base) is None
+    assert artifacts.read_meta(base) is None
     assert not os.path.exists(base)
 
     # served probe over the rebuilt artifact finds the drifted batch's
@@ -934,7 +934,7 @@ def test_bm25index_query_stride_zero_indexes_all_docs(spark, tmp_path,
     (the retrieval convention, now a recorded+gated parameter), and
     `--query-stride 0` indexes every document; meta n_docs is the
     count idf/avgdl actually saw in both cases."""
-    from sc_crawler_spark.sinks import postings_store
+    from sc_crawler_spark.sinks import artifacts, postings_store
 
     lake = str(tmp_path / "lake")
     os.makedirs(lake)
@@ -965,10 +965,10 @@ def test_bm25index_query_stride_zero_indexes_all_docs(spark, tmp_path,
     # the stride is gated: a consumer expecting the 13-convention
     # must NOT match the index-all artifact
     digest = meta2["digest"]
-    assert postings_store.bm25_index_matches(out2, digest,
-                                             query_stride=None)
-    assert not postings_store.bm25_index_matches(out2, digest,
-                                                 query_stride=13)
+    assert artifacts.matches(out2, "bm25", digest,
+                             query_stride=None)
+    assert not artifacts.matches(out2, "bm25", digest,
+                                 query_stride=13)
 
 
 def test_artifacts_prune_never_deletes_the_root_itself(spark, tmp_path):

@@ -810,7 +810,7 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
     from sc_crawler_spark import cli, tables
     from sc_crawler_spark.operators.dedup import minhash_lsh_pairs
     from sc_crawler_spark.queries.pipeline import _PAIR_MEMO, doc_pagerank
-    from sc_crawler_spark.sinks import index_store
+    from sc_crawler_spark.sinks import artifacts, index_store
     from sc_crawler_spark.streaming import (
         read_document_stream, stream_near_dedup)
 
@@ -861,8 +861,8 @@ def test_stream_fold_back_into_lake_index(spark, tmpdir, capsys,
     union = spark.createDataFrame(union_rows, "doc_id long, text string")
     want_digest = index_store.corpus_digest(union, "text", "doc_id")
     assert index_store.read_index_meta(folded)["digest"] == want_digest
-    assert index_store.index_matches(folded, want_digest, k=3,
-                                     n_hashes=8, threshold=0.5)
+    assert artifacts.matches(folded, "minhash", want_digest, k=3,
+                             n_hashes=8, threshold=0.5)
 
     # folded pair graph == full-corpus recomputation
     want_pairs = {(r.id_a, r.id_b, r.jaccard) for r in minhash_lsh_pairs(
@@ -903,7 +903,7 @@ def test_fold_digest_partials_merge_exactly(spark, tmpdir):
     """merge_digests is exact under arbitrary splits: the digest of a
     corpus equals the merge of its parts' digests, including negative
     xor values (signed 64-bit wrap) and an empty part (xor identity)."""
-    from sc_crawler_spark.sinks.index_store import (
+    from sc_crawler_spark.sinks.artifacts import (
         corpus_digest, merge_digests)
 
     rows = [(i, f"document text number {i} with words") for i in range(50)]
@@ -914,8 +914,8 @@ def test_fold_digest_partials_merge_exactly(spark, tmpdir):
                       "doc_id")
         for r in range(3)
     ]
-    assert merge_digests(parts) == whole
-    assert merge_digests([whole, "0_0"]) == whole  # empty batch
+    empty = corpus_digest(df.filter(F.lit(False)), "text", "doc_id")
+    assert merge_digests(parts + [empty]) == whole
 
 
 def test_jpeg_codec_block_constant_exact_roundtrip():
