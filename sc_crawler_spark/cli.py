@@ -20,6 +20,7 @@ Usage: ``python -m sc_crawler_spark.cli <cmd> ...``
 from __future__ import annotations
 
 import argparse
+import functools
 import hashlib
 import json
 import os
@@ -412,287 +413,64 @@ def cmd_inventory(spark: SparkSession, bronze: str, lake: str,
                   vendor: str = "aws",
                   records: list[str] | None = None) -> None:
     """The reference's per-vendor `pull` (cli.py:868-906, §3.1) over a
-    landed bronze tree:
+    landed bronze tree ``<bronze>/<vendor>/``. Every vendor takes one
+    path:
 
-    - ``<bronze>/<vendor>/instance_types.json`` — one raw
-      describe-instance-types payload per line (S1),
-    - ``<bronze>/<vendor>/products.json`` — pricing rows with the nested
-      ``terms`` JSON (P2 walk),
-    - ``<bronze>/<vendor>/regions.json`` / ``zones.json`` — dims.
+    1. read and standardize (P1) the vendor's server file: AWS-format
+       ``instance_types.json`` (one raw describe-instance-types payload
+       per line; the default), GCP ``machine_types.json``
+       (_gcp.py:289-350), Azure ``skus.json`` (_azure.py:453-579) or the
+       spec-driven ``servers.json`` of a catalog vendor;
+    2. keep-last dedup on arrival position (A4), the ``display_name``
+       default, then validate/default-fill (P8) into the run's
+       :class:`_Inventory`;
+    3. build the vendor's other record families (tables.py:165-184):
+       server prices, storage, traffic, ipv4, databases, and the
+       ``regions.json`` / ``zones.json`` dims;
+    4. :func:`_land_tables`: vendor-scoped merge-upsert with
+       inactivate-missing (K1+T1), invalid rows appended to
+       ``server_invalid`` instead of failing the job.
 
-    standardize (P1) -> keep-last dedup (A4) -> validate/default-fill
-    (P8) -> price assembly with zone fan-out (J2) -> merge-upsert into
-    the lake with inactivate-missing (K1+T1). Invalid rows go to an
-    error-side table, never fail the job.
-
-    GCP (``machine_types.json``, _gcp.py:289-350) and Azure
-    (``skus.json``, _azure.py:453-579) land server shapes through their
-    own standardizers; all vendors share the same silver merge path with
-    a per-vendor inactivation scope.
-
-    Beyond servers, every OTHER record type the reference inventories
-    (tables.py:165-184) lands when its bronze file is present:
-    ``storage``/``storage_price`` (storage_products.json,
-    _aws.py:1169-1266), ``database``/``database_price``/
-    ``database_storage``/``database_storage_price`` (rds_products.json
-    + rds_orderable_options.json + rds_engine_versions.json,
-    _aws.py:1541-1758), ``traffic_price`` with full price tiers
-    (traffic_products.json, _aws.py:1268-1309) and ``ipv4_price``
-    (ipv4_products.json, _aws.py:1312-1349).
+    The server file is the one required bronze file. Every other family
+    lands only when its bronze files were crawled, and a price family
+    that fans out over regions also needs ``regions.json``; a family
+    that did not land leaves the vendor's landed rows as they were.
     """
-    from .operators.validate import validate_items
     from .operators.windows import keep_last_dedup
-    from .sources import aws
+    from .sources.catalog import VENDOR_SERVER_SPECS, static_service_tables
 
-    from .sources.catalog import VENDOR_SERVER_SPECS
-
-    if vendor == "azure" or vendor in VENDOR_SERVER_SPECS:
-        _inventory_catalog_vendor(spark, bronze, lake, vendor, records)
-        return
     vroot = os.path.join(bronze, vendor)
-    raw = spark.read.schema(aws.RAW_INSTANCE_TYPE).json(
-        os.path.join(vroot, "instance_types.json")
-    )
-    payload = raw.select(
-        F.struct(*[F.col(f.name) for f in aws.RAW_INSTANCE_TYPE.fields])
-        .alias("payload")
-    )
-    servers = aws.standardize_instance_types(payload, vendor).withColumn(
-        "_pos", F.monotonically_increasing_id()
-    )
+    servers, raw = _read_servers(spark, vroot, vendor)
     servers = keep_last_dedup(
-        servers, ["vendor_id", "server_id"], "_pos"
+        servers.withColumn("_pos", F.monotonically_increasing_id()),
+        ["vendor_id", "server_id"], "_pos",
     ).drop("_pos")
-    valid, invalid = validate_items(servers, "server")
+    if "display_name" not in servers.columns:
+        # ScModel default: display_name falls back to the plan name
+        servers = servers.withColumn("display_name", F.col("name"))
+    inv = _Inventory("server_invalid")
+    inv.add("server", servers)
 
-    # every bronze file is existence-gated (a servers-only crawl is a
-    # legal partial tree — stream_server_inventory produces exactly
-    # that); a missing pricing/region file degrades to an empty frame
-    # so the server table still lands instead of the whole run dying
-    # on PATH_NOT_FOUND
-    def _read_or_empty(fname: str, schema: str):
-        p = os.path.join(vroot, fname)
-        if os.path.exists(p):
-            return spark.read.schema(schema).json(p)
-        return spark.createDataFrame([], schema)
-
-    prods = _read_or_empty(
-        "products.json",
-        "instance_type string, location string, operating_system string, "
-        "terms string")
-    products = prods.select(
-        "instance_type", "location", "operating_system",
-        F.round(
-            aws.extract_ondemand_price(
-                F.from_json("terms", aws.TERMS_SCHEMA)
-            ), 4,
-        ).alias("price"),
-    ).filter(F.col("price").isNotNull())
-    regions = _read_or_empty(
-        "regions.json",
-        "region_id string, name string, aliases array<string>")
-    zones = _read_or_empty(
-        "zones.json", "region_id string, zones array<string>")
-    prices = aws.assemble_server_prices(
-        products, valid.select("vendor_id", "server_id"), regions, zones
-    )
-    spot_path = os.path.join(vroot, "spot_prices.json")
-    if os.path.exists(spot_path):
-        from .sources import aws_services as svc
-
-        raw_spot = spark.read.schema(svc.RAW_SPOT_PRICE).json(spot_path)
-        prices = prices.unionByName(
-            svc.assemble_spot_prices(raw_spot, valid, zones, vendor),
-            allowMissingColumns=True,
-        )
-    prices_valid, prices_invalid = validate_items(prices, "server_price")
-
-    svc_outputs, svc_invalids = _service_inventories(
-        spark, vroot, regions, valid, vendor
-    )
-    all_invalid = invalid.unionByName(prices_invalid, allowMissingColumns=True)
-    for inv in svc_invalids:
-        all_invalid = all_invalid.unionByName(inv, allowMissingColumns=True)
-
-    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor)
-    for inv in rz_invalids:
-        all_invalid = all_invalid.unionByName(inv, allowMissingColumns=True)
+    regions = _bronze(spark, vroot, "regions.json", _REGION_BRONZE_SCHEMA)
+    zones = _bronze(spark, vroot, "zones.json",
+                    "region_id string, zones array<string>")
+    # static service catalogs (documented constants, reference
+    # _hcloud.py:294-386) fan out over the vendor's region list
+    for table, df in static_service_tables(spark, vendor, regions).items():
+        inv.add(table, df)
+    if vendor == "gcp":
+        _gcp_families(spark, inv, vroot, regions)
+    elif vendor == "azure":
+        _azure_families(spark, inv, vroot, regions, zones)
+    elif vendor in VENDOR_SERVER_SPECS:
+        _catalog_families(spark, inv, vroot, vendor, raw, regions, zones)
+    else:
+        _aws_families(spark, inv, vroot, vendor, regions, zones)
+    _region_zone_families(inv, vendor, regions, zones)
 
     os.makedirs(lake, exist_ok=True)
     _ensure_lake(lake)
-    outputs = {
-        "server": (valid, schemas.PRIMARY_KEYS["server"]),
-        "server_price": (prices_valid, schemas.PRIMARY_KEYS["server_price"]),
-        **svc_outputs,
-        **rz_outputs,
-        "server_invalid": (all_invalid, None),
-    }
-    _land_tables(spark, lake, outputs, vendor, records)
-
-
-_REGION_BRONZE_SCHEMA = (
-    "region_id string, name string, aliases array<string>, "
-    "api_reference string, options array<string>, country_id string, "
-    "state string, city string, lon double, lat double, "
-    "founding_year int, green_energy boolean"
-)
-
-
-def _region_zone_tables(spark: SparkSession, vroot: str, vendor: str):
-    """region / zone dim rows from the bronze fan-out files — the
-    reference's per-vendor `inventory_regions` / `inventory_zones`
-    (tables.py:165-168) land as tables, not just price fan-out inputs.
-    Rows missing required facts (e.g. country_id) quarantine to the
-    invalid side like every other record type."""
-    from .operators.validate import validate_items
-
-    out: dict = {}
-    invalids = []
-    rp = os.path.join(vroot, "regions.json")
-    if os.path.exists(rp):
-        r = spark.read.schema(_REGION_BRONZE_SCHEMA).json(rp)
-        reg = r.select(
-            F.lit(vendor).alias("vendor_id"), "region_id",
-            F.coalesce("name", "region_id").alias("name"),
-            F.coalesce("api_reference", "region_id").alias("api_reference"),
-            F.coalesce("name", "region_id").alias("display_name"),
-            "aliases", "country_id", "state", "city",
-            "lon", "lat", "founding_year", "green_energy",
-        )
-        v, inv = validate_items(reg, "region")
-        # an all-invalid file (e.g. fan-out-only bronze without
-        # country facts) must not sweep the vendor's landed regions
-        # inactive — land only when something validated
-        if v.take(1):
-            out["region"] = (v, schemas.PRIMARY_KEYS["region"])
-        invalids.append(inv)
-    zp = os.path.join(vroot, "zones.json")
-    if os.path.exists(zp):
-        z = spark.read.schema(
-            "region_id string, zones array<string>").json(zp)
-        zz = z.select("region_id",
-                      F.explode("zones").alias("zone_id")).select(
-            F.lit(vendor).alias("vendor_id"), "region_id", "zone_id",
-            F.col("zone_id").alias("name"),
-            F.col("zone_id").alias("api_reference"),
-            F.col("zone_id").alias("display_name"),
-        )
-        v, inv = validate_items(zz, "zone")
-        if v.take(1):  # same sweep guard as regions above
-            out["zone"] = (v, schemas.PRIMARY_KEYS["zone"])
-        invalids.append(inv)
-    return out, invalids
-
-
-def _land_tables(spark: SparkSession, lake: str, outputs: dict,
-                 vendor: str, records: list[str] | None = None,
-                 scopes: dict | None = None) -> None:
-    """Shared silver landing: per table, vendor-scoped merge-upsert with
-    inactivate-missing (K1+T1) into the versioned snapshot.
-
-    ``records`` mirrors the reference pull's ``--include-records``
-    (cli.py:774-782): when given, only the named record families land —
-    frames are lazy, so a skipped family never computes. The error-side
-    table always lands (it is the run's audit trail).
-
-    ``scopes`` overrides the inactivation sweep per table (a boolean
-    Column over the current snapshot); tables not named keep the
-    default per-vendor scope. PK-less tables (the ``*_invalid`` audit
-    trails) APPEND to the existing snapshot — replacing it would wipe
-    other vendors' quarantined rows."""
-    if records is not None:
-        keep = set(records)
-        outputs = {t: v for t, v in outputs.items()
-                   if t in keep or t.endswith("_invalid")}
-    for table, (df, pks) in outputs.items():
-        path = _table_path(lake, table)
-        # explicit existence gate, never a blanket except: a genuine
-        # read/merge failure must propagate — swallowing it would land
-        # ONLY this vendor's rows and silently wipe every other
-        # vendor's data from the table
-        if pks and snapshot_exists(path):
-            current = read_snapshot(spark, path)
-            scope = (scopes or {}).get(
-                table,
-                # per-vendor pull: never sweep other vendors' rows
-                F.col("vendor_id") == vendor
-                if "vendor_id" in current.columns else None,
-            )
-            df = merge_upsert(
-                current, df.select(*current.columns), pks,
-                inactivate_missing=True, scope=scope,
-            )
-        elif not pks and snapshot_exists(path):
-            df = read_snapshot(spark, path).unionByName(
-                df, allowMissingColumns=True)
-        _rewrite(spark, df, path)
-        print(f"inventory: {table}: {read_snapshot(spark, path).count()} rows")
-
-
-def _service_inventories(spark: SparkSession, vroot: str, regions: DataFrame,
-                         servers_valid: DataFrame, vendor: str):
-    """Non-server record types, each landing iff its bronze file exists
-    (the reference's 14 per-vendor inventory methods, tables.py:165-184).
-    Returns ({table: (valid_df, pks)}, [invalid_dfs])."""
-    from .operators.validate import validate_items
-    from .sources import aws_services as svc
-
-    outputs: dict = {}
-    invalids: list[DataFrame] = []
-
-    def _path(name: str) -> str | None:
-        p = os.path.join(vroot, name)
-        return p if os.path.exists(p) else None
-
-    def _add(table: str, df: DataFrame) -> DataFrame:
-        valid, invalid = validate_items(df, table)
-        outputs[table] = (valid, schemas.PRIMARY_KEYS[table])
-        invalids.append(invalid)
-        return valid
-
-    storage_path = _path("storage_products.json")
-    if storage_path:
-        raw = spark.read.schema(svc.RAW_STORAGE_PRODUCT).json(storage_path)
-        _add("storage", svc.storage_catalog(raw, vendor))
-        _add("storage_price",
-             svc.assemble_storage_prices(raw, regions, vendor))
-
-    rds_path = _path("rds_products.json")
-    if rds_path:
-        rds = spark.read.schema(svc.RAW_RDS_PRODUCT).json(rds_path)
-        opts_path = _path("rds_orderable_options.json")
-        options = (
-            spark.read.schema(svc.RAW_ORDERABLE_OPTION).json(opts_path)
-            if opts_path
-            else spark.createDataFrame([], svc.RAW_ORDERABLE_OPTION)
-        )
-        vers_path = _path("rds_engine_versions.json")
-        versions = (
-            spark.read.schema("version string").json(vers_path)
-            if vers_path
-            else spark.createDataFrame([], "version string")
-        )
-        _add("database", svc.standardize_databases(
-            rds, servers_valid.select("server_id"), versions, options, vendor))
-        _add("database_price",
-             svc.assemble_database_prices(rds, regions, vendor))
-        db_storage = _add(
-            "database_storage", svc.database_storage_catalog(options, vendor))
-        _add("database_storage_price", svc.assemble_database_storage_prices(
-            rds, regions, db_storage, vendor))
-
-    traffic_path = _path("traffic_products.json")
-    if traffic_path:
-        raw = spark.read.schema(svc.RAW_TRAFFIC_PRODUCT).json(traffic_path)
-        _add("traffic_price",
-             svc.assemble_traffic_prices(raw, regions, vendor))
-
-    ipv4_path = _path("ipv4_products.json")
-    if ipv4_path:
-        raw = spark.read.schema(svc.RAW_IPV4_PRODUCT).json(ipv4_path)
-        _add("ipv4_price", svc.assemble_ipv4_prices(raw, regions, vendor))
-
-    return outputs, invalids
+    _land_tables(spark, lake, inv, vendor, records)
 
 
 _GCP_MACHINE_TYPE_SCHEMA = (
@@ -705,302 +483,375 @@ _AZURE_SKU_SCHEMA = (
     "name string, family string, "
     "capabilities array<struct<name:string,value:string>>"
 )
+_REGION_BRONZE_SCHEMA = (
+    "region_id string, name string, aliases array<string>, "
+    "api_reference string, options array<string>, country_id string, "
+    "state string, city string, lon double, lat double, "
+    "founding_year int, green_energy boolean"
+)
 
 
-def _inventory_catalog_vendor(spark: SparkSession, bronze: str, lake: str,
-                              vendor: str,
-                              records: list[str] | None = None) -> None:
-    """GCP/Azure server inventory: bronze JSON -> standardize (P1) ->
-    validate (P8) -> vendor-scoped merge into the shared server table."""
-    from .operators.validate import validate_items
+def _bronze(spark: SparkSession, vroot: str, name: str,
+            schema) -> DataFrame | None:
+    """``<vroot>/<name>`` read as JSON Lines with ``schema``, or None when
+    the crawl did not land that file."""
+    path = os.path.join(vroot, name)
+    if not os.path.exists(path):
+        return None
+    return spark.read.schema(schema).json(path)
+
+
+def _read_servers(spark: SparkSession, vroot: str,
+                  vendor: str) -> tuple[DataFrame, DataFrame | None]:
+    """The vendor's standardized server rows, plus the raw
+    ``servers.json`` payload of a spec-driven catalog vendor (its price
+    builders read it too). A missing server file fails the run."""
+    from .sources import aws
     from .sources.azure import standardize_azure_servers
-    from .sources.catalog import standardize_catalog
+    from .sources.catalog import VENDOR_SERVER_SPECS, standardize_catalog
 
-    vroot = os.path.join(bronze, vendor)
-    generic_raw = None
     if vendor == "gcp":
         raw = spark.read.schema(_GCP_MACHINE_TYPE_SCHEMA).json(
             os.path.join(vroot, "machine_types.json"))
-        servers = standardize_catalog(raw, "gcp")
-    elif vendor == "azure":
+        return standardize_catalog(raw, "gcp"), None
+    if vendor == "azure":
         raw = spark.read.schema(_AZURE_SKU_SCHEMA).json(
             os.path.join(vroot, "skus.json"))
-        servers = standardize_azure_servers(raw)
-    else:  # long-tail catalog vendors: data-driven spec over servers.json
-        # bronze convention is JSON Lines (one payload per line), like
-        # every other vendor landing in this tree
+        return standardize_azure_servers(raw), None
+    if vendor in VENDOR_SERVER_SPECS:
+        # data-driven spec over schema-inferred JSON Lines
         raw = spark.read.json(os.path.join(vroot, "servers.json"))
-        servers = standardize_catalog(raw, vendor)
-        generic_raw = raw
-    if "display_name" not in servers.columns:
-        # ScModel default: display_name falls back to the plan name
-        servers = servers.withColumn("display_name", F.col("name"))
-    valid, invalid = validate_items(servers, "server")
-
-    os.makedirs(lake, exist_ok=True)
-    _ensure_lake(lake)
-    outputs = {"server": (valid, schemas.PRIMARY_KEYS["server"])}
-
-    # static service catalogs (storage/traffic/ipv4 documented constants,
-    # reference _hcloud.py:294-386) fan out over the landed region list
-    from .sources.catalog import STATIC_SERVICE_CATALOGS, static_service_tables
-
-    regions_path = os.path.join(vroot, "regions.json")
-    regions = (
-        spark.read.schema(
-            "region_id string, name string, aliases array<string>, "
-            "api_reference string, options array<string>"
-        ).json(regions_path)
-        if os.path.exists(regions_path) else None
+        return standardize_catalog(raw, vendor), raw
+    raw = spark.read.schema(aws.RAW_INSTANCE_TYPE).json(
+        os.path.join(vroot, "instance_types.json"))
+    payload = raw.select(
+        F.struct(*[F.col(f.name) for f in aws.RAW_INSTANCE_TYPE.fields])
+        .alias("payload")
     )
-    if vendor in STATIC_SERVICE_CATALOGS:
-        for t, df in static_service_tables(spark, vendor, regions).items():
-            v, inv = validate_items(df, t)
-            outputs[t] = (v, schemas.PRIMARY_KEYS[t])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
+    return aws.standardize_instance_types(payload, vendor), None
 
-    rz_outputs, rz_invalids = _region_zone_tables(spark, vroot, vendor)
-    outputs.update(rz_outputs)
-    for inv in rz_invalids:
-        invalid = invalid.unionByName(inv, allowMissingColumns=True)
 
-    # embedded per-location price lists (hcloud-style monthly-cap tiers)
-    if (generic_raw is not None and regions is not None
-            and "prices" in generic_raw.columns):
-        from .sources.catalog import catalog_server_prices
+class _Inventory:
+    """One run's validated record families plus its invalid rows.
 
-        v, inv = validate_items(
-            catalog_server_prices(generic_raw, regions, vendor),
-            "server_price")
-        outputs["server_price"] = (v, schemas.PRIMARY_KEYS["server_price"])
-        invalid = invalid.unionByName(inv, allowMissingColumns=True)
+    ``add(table, df)`` validates ``df`` (P8), unions the valid rows into
+    ``table`` when the family is already present (e.g. ondemand + spot
+    server prices), keeps the invalid rows for the run's ``audit``
+    table, and returns the family's valid rows for the builders that
+    consume them (servers -> prices, storage -> storage prices)."""
 
-    # long-tail vendor server prices: vultr embedded costs + location
-    # overrides (_vultr.py:546-627), upcloud zone price list + GPU gate
-    # (_upcloud.py:446-521), ovh addon-catalog join (_ovh.py:751-800),
-    # alicloud SKU prices + availability gate (_alicloud.py:1030-1124)
+    def __init__(self, audit: str):
+        self.audit = audit
+        self.tables: dict[str, DataFrame] = {}
+        self.invalid: list[DataFrame] = []
+
+    def add(self, table: str, df: DataFrame) -> DataFrame:
+        from .operators.validate import validate_items
+
+        valid, invalid = validate_items(df, table)
+        if table in self.tables:
+            valid = self.tables[table].unionByName(valid)
+        self.tables[table] = valid
+        self.invalid.append(invalid)
+        return valid
+
+
+def _land_tables(spark: SparkSession, lake: str, inv: _Inventory,
+                 vendor: str, records: list[str] | None = None,
+                 scopes: dict | None = None) -> None:
+    """Shared silver landing: per table, vendor-scoped merge-upsert with
+    inactivate-missing (K1+T1) on its ``schemas.PRIMARY_KEYS`` into the
+    versioned snapshot; then the union of the run's invalid rows lands
+    in the PK-less audit table, APPENDED to its snapshot (replacing it
+    would wipe other vendors' quarantined rows).
+
+    ``records`` mirrors the reference pull's ``--include-records``
+    (cli.py:774-782): when given, only the named record families land —
+    frames are lazy, so a skipped family never computes. The audit table
+    always lands (it is the run's audit trail).
+
+    ``scopes`` overrides the inactivation sweep per table (a boolean
+    Column over the current snapshot); tables not named keep the
+    default per-vendor scope."""
+    outputs = {t: df for t, df in inv.tables.items()
+               if records is None or t in records}
+    outputs[inv.audit] = functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), inv.invalid)
+    for table, df in outputs.items():
+        path = _table_path(lake, table)
+        pks = schemas.PRIMARY_KEYS.get(table)
+        # explicit existence gate, never a blanket except: a genuine
+        # read/merge failure must propagate — swallowing it would land
+        # ONLY this vendor's rows and silently wipe every other
+        # vendor's data from the table
+        if snapshot_exists(path):
+            current = read_snapshot(spark, path)
+            if pks:
+                scope = (scopes or {}).get(
+                    table,
+                    # per-vendor pull: never sweep other vendors' rows
+                    F.col("vendor_id") == vendor
+                    if "vendor_id" in current.columns else None,
+                )
+                df = merge_upsert(
+                    current, df.select(*current.columns), pks,
+                    inactivate_missing=True, scope=scope,
+                )
+            else:
+                df = current.unionByName(df, allowMissingColumns=True)
+        _rewrite(spark, df, path)
+        print(f"inventory: {table}: {read_snapshot(spark, path).count()} rows")
+
+
+def _region_zone_families(inv: _Inventory, vendor: str,
+                          regions: DataFrame | None,
+                          zones: DataFrame | None) -> None:
+    """region / zone dim rows from the bronze fan-out files — the
+    reference's per-vendor `inventory_regions` / `inventory_zones`
+    (tables.py:165-168) land as tables, not just price fan-out inputs.
+    Rows missing required facts (e.g. country_id) quarantine like every
+    other record type, and a file with no valid row (fan-out-only
+    bronze without country facts) does not land at all, so it never
+    sweeps the vendor's landed regions or zones inactive."""
+    if regions is not None:
+        inv.add("region", regions.select(
+            F.lit(vendor).alias("vendor_id"), "region_id",
+            F.coalesce("name", "region_id").alias("name"),
+            F.coalesce("api_reference", "region_id").alias("api_reference"),
+            F.coalesce("name", "region_id").alias("display_name"),
+            "aliases", "country_id", "state", "city",
+            "lon", "lat", "founding_year", "green_energy",
+        ))
+    if zones is not None:
+        inv.add("zone", zones.select(
+            "region_id", F.explode("zones").alias("zone_id"),
+        ).select(
+            F.lit(vendor).alias("vendor_id"), "region_id", "zone_id",
+            F.col("zone_id").alias("name"),
+            F.col("zone_id").alias("api_reference"),
+            F.col("zone_id").alias("display_name"),
+        ))
+    for table in ("region", "zone"):
+        if table in inv.tables and not inv.tables[table].take(1):
+            del inv.tables[table]
+
+
+def _aws_families(spark: SparkSession, inv: _Inventory, vroot: str,
+                  vendor: str, regions: DataFrame | None,
+                  zones: DataFrame | None) -> None:
+    """AWS-format families: ondemand ``server_price`` from
+    ``products.json`` (nested ``terms`` walk P2, zone fan-out J2), spot
+    prices, ``storage``/``storage_price`` (storage_products.json,
+    _aws.py:1169-1266), ``database``/``database_price``/
+    ``database_storage``/``database_storage_price`` (rds_products.json
+    + rds_orderable_options.json + rds_engine_versions.json,
+    _aws.py:1541-1758), ``traffic_price`` with full price tiers
+    (traffic_products.json, _aws.py:1268-1309) and ``ipv4_price``
+    (ipv4_products.json, _aws.py:1312-1349)."""
+    from .sources import aws
+    from .sources import aws_services as svc
+
+    servers = inv.tables["server"]
+    products = _bronze(
+        spark, vroot, "products.json",
+        "instance_type string, location string, operating_system string, "
+        "terms string")
+    if products is not None and regions is not None and zones is not None:
+        ondemand = products.select(
+            "instance_type", "location", "operating_system",
+            F.round(aws.extract_ondemand_price(
+                F.from_json("terms", aws.TERMS_SCHEMA)), 4).alias("price"),
+        ).filter(F.col("price").isNotNull())
+        inv.add("server_price", aws.assemble_server_prices(
+            ondemand, servers.select("vendor_id", "server_id"),
+            regions, zones))
+    spot = _bronze(spark, vroot, "spot_prices.json", svc.RAW_SPOT_PRICE)
+    if spot is not None and zones is not None:
+        inv.add("server_price",
+                svc.assemble_spot_prices(spot, servers, zones, vendor))
+
+    storage = _bronze(spark, vroot, "storage_products.json",
+                      svc.RAW_STORAGE_PRODUCT)
+    if storage is not None:
+        inv.add("storage", svc.storage_catalog(storage, vendor))
+        if regions is not None:
+            inv.add("storage_price",
+                    svc.assemble_storage_prices(storage, regions, vendor))
+
+    rds = _bronze(spark, vroot, "rds_products.json", svc.RAW_RDS_PRODUCT)
+    options = _bronze(spark, vroot, "rds_orderable_options.json",
+                      svc.RAW_ORDERABLE_OPTION)
+    versions = _bronze(spark, vroot, "rds_engine_versions.json",
+                       "version string")
+    if rds is not None and options is not None and versions is not None:
+        inv.add("database", svc.standardize_databases(
+            rds, servers.select("server_id"), versions, options, vendor))
+        db_storage = inv.add(
+            "database_storage", svc.database_storage_catalog(options, vendor))
+        if regions is not None:
+            inv.add("database_price",
+                    svc.assemble_database_prices(rds, regions, vendor))
+            inv.add("database_storage_price",
+                    svc.assemble_database_storage_prices(
+                        rds, regions, db_storage, vendor))
+
+    traffic = _bronze(spark, vroot, "traffic_products.json",
+                      svc.RAW_TRAFFIC_PRODUCT)
+    if traffic is not None and regions is not None:
+        inv.add("traffic_price",
+                svc.assemble_traffic_prices(traffic, regions, vendor))
+    ipv4 = _bronze(spark, vroot, "ipv4_products.json", svc.RAW_IPV4_PRODUCT)
+    if ipv4 is not None and regions is not None:
+        inv.add("ipv4_price", svc.assemble_ipv4_prices(ipv4, regions, vendor))
+
+
+def _gcp_families(spark: SparkSession, inv: _Inventory, vroot: str,
+                  regions: DataFrame | None) -> None:
+    """GCP billing-catalog families from the bronze SKU pages: disk
+    ``storage`` + prices, network ``traffic_price`` and Cloud SQL
+    (PostgreSQL) databases + storage. Every one is gated on the landed
+    regions."""
+    from .sources import gcp, gcp_sql
+
+    if regions is None:
+        return
+    disks = _bronze(spark, vroot, "disk_types.json", gcp.RAW_DISK_TYPE)
+    if disks is not None:
+        storage = inv.add("storage", gcp.gcp_storage_catalog(disks))
+        skus = _bronze(spark, vroot, "storage_skus.json", gcp.RAW_STORAGE_SKU)
+        if skus is not None:
+            inv.add("storage_price",
+                    gcp.gcp_storage_prices(skus, storage, regions))
+    net = _bronze(spark, vroot, "network_skus.json", gcp.RAW_NETWORK_SKU)
+    if net is not None:
+        inv.add("traffic_price", gcp.gcp_traffic_prices(net, regions))
+
+    sql_skus = _bronze(spark, vroot, "cloudsql_skus.json",
+                       gcp_sql.RAW_CLOUDSQL_SKU)
+    tiers = _bronze(spark, vroot, "sql_tiers.json", gcp_sql.RAW_SQL_TIER)
+    if sql_skus is not None and tiers is not None:
+        meta = _bronze(spark, vroot, "sql_metadata.json",
+                       gcp_sql.RAW_SQL_METADATA)
+        if meta is None:  # the engine-metadata dim is one row, maybe empty
+            meta = spark.createDataFrame([([], None, None)],
+                                         gcp_sql.RAW_SQL_METADATA)
+        inv.add("database", gcp_sql.gcp_sql_databases(
+            tiers, meta, sql_skus, inv.tables["server"]))
+        inv.add("database_price",
+                gcp_sql.gcp_sql_database_prices(tiers, sql_skus, regions))
+        inv.add("database_storage",
+                gcp_sql.gcp_sql_database_storages(sql_skus))
+        inv.add("database_storage_price",
+                gcp_sql.gcp_sql_database_storage_prices(sql_skus, regions))
+
+
+def _azure_families(spark: SparkSession, inv: _Inventory, vroot: str,
+                    regions: DataFrame | None,
+                    zones: DataFrame | None) -> None:
+    """Azure families from the compute-resource disks, the Retail Prices
+    API pages and the PostgreSQL Flexible Server capabilities: disk
+    ``storage`` + prices, traffic and ipv4 prices, ondemand + spot VM
+    ``server_price`` fanned per zone, and databases + storage. Every
+    one is gated on the landed regions."""
+    from .sources import azure, azure_sql
+
+    if regions is None:
+        return
+    retail = _bronze(spark, vroot, "retail_prices.json",
+                     azure.RAW_RETAIL_PRICE)
+    disks = _bronze(spark, vroot, "disks.json", azure.RAW_AZURE_DISK)
+    if disks is not None:
+        storage = inv.add("storage", azure.azure_storage_catalog(disks))
+        if retail is not None:
+            inv.add("storage_price",
+                    azure.azure_storage_prices(retail, storage, regions))
+    if retail is not None:
+        inv.add("traffic_price", azure.azure_traffic_prices(retail, regions))
+        inv.add("ipv4_price", azure.azure_ipv4_prices(retail, regions))
+        if zones is not None:
+            for allocation in ("ondemand", "spot"):
+                inv.add("server_price", azure.azure_server_prices(
+                    retail, inv.tables["server"], regions, zones,
+                    allocation))
+
+    caps = _bronze(spark, vroot, "pg_capabilities.json",
+                   azure_sql.RAW_PG_CAPABILITY)
+    if caps is not None:
+        inv.add("database", azure_sql.azure_pg_databases(caps))
+        db_storage = inv.add("database_storage",
+                             azure_sql.azure_pg_database_storages(caps))
+        if retail is not None:
+            inv.add("database_price", azure_sql.azure_pg_database_prices(
+                caps, retail, regions))
+            inv.add("database_storage_price",
+                    azure_sql.azure_pg_database_storage_prices(
+                        retail, db_storage, regions))
+
+
+def _catalog_families(spark: SparkSession, inv: _Inventory, vroot: str,
+                      vendor: str, raw: DataFrame,
+                      regions: DataFrame | None,
+                      zones: DataFrame | None) -> None:
+    """Spec-driven catalog vendors' server prices: hcloud-style embedded
+    per-location price lists, vultr embedded costs + location overrides
+    (_vultr.py:546-627), the upcloud zone price list + GPU gate
+    (_upcloud.py:446-521, also its storage/traffic/ipv4 prices,
+    :524-583), the ovh addon-catalog join (_ovh.py:751-800) and the
+    alicloud SKU prices + availability gate (_alicloud.py:1030-1124),
+    spot responses (:1118-1206) and storage/traffic SKU pages
+    (:1355-1438)."""
     from .sources import catalog as cat
 
-    zones_path = os.path.join(vroot, "zones.json")
-    zone_off = (
-        spark.read.schema("region_id string, zones array<string>")
-        .json(zones_path) if os.path.exists(zones_path) else None
-    )
-    price_frames = []
-    if vendor == "vultr" and generic_raw is not None:
-        raw_p = spark.read.schema(cat.RAW_VULTR_PRICE).json(
+    if regions is not None and "prices" in raw.columns:
+        inv.add("server_price", cat.catalog_server_prices(raw, regions, vendor))
+    if vendor == "vultr":
+        costs = spark.read.schema(cat.RAW_VULTR_PRICE).json(
             os.path.join(vroot, "servers.json"))
-        price_frames += [cat.vultr_server_prices(raw_p, "ondemand"),
-                         cat.vultr_server_prices(raw_p, "spot")]
+        for allocation in ("ondemand", "spot"):
+            inv.add("server_price", cat.vultr_server_prices(costs, allocation))
     elif vendor == "upcloud":
         zp_path = os.path.join(vroot, "zone_prices.json")
         if os.path.exists(zp_path):
             zp = cat.upcloud_zone_prices(spark, zp_path)
-            ga_schema = "region_id string, plan string, amount int"
-            ga_path = os.path.join(vroot, "gpu_availability.json")
-            ga = (spark.read.schema(ga_schema).json(ga_path)
-                  if os.path.exists(ga_path)
-                  else spark.createDataFrame([], ga_schema))
-            price_frames += [cat.upcloud_server_prices(zp, ga, "ondemand"),
-                             cat.upcloud_server_prices(zp, ga, "spot")]
-            # storage/traffic/ipv4 prices ride the SAME zone price list
-            # (_upcloud.py:524-583)
-            for t, df in cat.upcloud_service_prices(spark, zp_path).items():
-                v, inv = validate_items(df, t)
-                outputs[t] = (v, schemas.PRIMARY_KEYS[t])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-    elif vendor == "ovh" and generic_raw is not None and regions is not None:
-        fl_path = os.path.join(vroot, "flavors.json")
-        if os.path.exists(fl_path):
-            flavors = spark.read.schema(cat.RAW_OVH_FLAVOR).json(fl_path)
+            gpus = _bronze(spark, vroot, "gpu_availability.json",
+                           "region_id string, plan string, amount int")
+            for allocation in ("ondemand", "spot"):
+                inv.add("server_price",
+                        cat.upcloud_server_prices(zp, gpus, allocation))
+            for table, df in cat.upcloud_service_prices(spark, zp_path).items():
+                inv.add(table, df)
+    elif vendor == "ovh" and regions is not None:
+        flavors = _bronze(spark, vroot, "flavors.json", cat.RAW_OVH_FLAVOR)
+        if flavors is not None:
             currency = "USD"  # catalog locale currency (_ovh.py:793)
             meta_path = os.path.join(vroot, "catalog_meta.json")
             if os.path.exists(meta_path):
                 with open(meta_path) as fh:
                     currency = json.loads(
                         fh.readline()).get("currencyCode", "USD")
-            price_frames.append(cat.ovh_server_prices(
-                generic_raw, flavors, regions, zone_off, currency))
+            inv.add("server_price", cat.ovh_server_prices(
+                raw, flavors, regions, zones, currency))
     elif vendor == "alicloud" and regions is not None:
-        sku_path = os.path.join(vroot, "sku_prices.json")
-        if os.path.exists(sku_path):
-            skus = spark.read.schema(cat.RAW_ALICLOUD_SKU).json(sku_path)
-            av_path = os.path.join(vroot, "availability.json")
-            av = (spark.read.schema(cat.RAW_ALICLOUD_AVAIL).json(av_path)
-                  if os.path.exists(av_path)
-                  else spark.createDataFrame([], cat.RAW_ALICLOUD_AVAIL))
-            price_frames.append(cat.alicloud_server_prices(
-                skus, av, regions, zone_off))
-        # time-budget-sampled spot responses (_alicloud.py:1118-1206);
+        skus = _bronze(spark, vroot, "sku_prices.json", cat.RAW_ALICLOUD_SKU)
+        if skus is not None:
+            avail = _bronze(spark, vroot, "availability.json",
+                            cat.RAW_ALICLOUD_AVAIL)
+            inv.add("server_price", cat.alicloud_server_prices(
+                skus, avail, regions, zones))
         # the probe plan itself is cat.alicloud_spot_probe_list
-        spot_path = os.path.join(vroot, "spot_prices.json")
-        if os.path.exists(spot_path):
-            resp = spark.read.schema(cat.RAW_ALICLOUD_SPOT).json(spot_path)
-            price_frames.append(cat.alicloud_spot_prices(resp))
-        # storage/traffic SKU pages (_alicloud.py:1355-1438)
-        for fname, fn, table in [
+        spot = _bronze(spark, vroot, "spot_prices.json", cat.RAW_ALICLOUD_SPOT)
+        if spot is not None:
+            inv.add("server_price", cat.alicloud_spot_prices(spot))
+        for fname, build, table in [
             ("storage_sku_prices.json", cat.alicloud_storage_prices,
              "storage_price"),
             ("traffic_sku_prices.json", cat.alicloud_traffic_prices,
              "traffic_price"),
         ]:
-            p = os.path.join(vroot, fname)
-            if os.path.exists(p):
-                sk = spark.read.schema(cat.RAW_ALICLOUD_SERVICE_SKU).json(p)
-                v, inv = validate_items(fn(sk, regions), table)
-                outputs[table] = (v, schemas.PRIMARY_KEYS[table])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-    if price_frames:
-        sp = price_frames[0]
-        for f in price_frames[1:]:
-            sp = sp.unionByName(f, allowMissingColumns=True)
-        v, inv = validate_items(sp, "server_price")
-        if "server_price" in outputs:  # embedded + assembled both present
-            v = outputs["server_price"][0].unionByName(v)
-        outputs["server_price"] = (v, schemas.PRIMARY_KEYS["server_price"])
-        invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    # GCP billing-catalog service inventories (bronze SKU pages)
-    if vendor == "gcp" and regions is not None:
-        from .sources import gcp as gcp_src
-
-        disks_path = os.path.join(vroot, "disk_types.json")
-        if os.path.exists(disks_path):
-            raw = spark.read.schema(gcp_src.RAW_DISK_TYPE).json(disks_path)
-            storage_valid, inv = validate_items(
-                gcp_src.gcp_storage_catalog(raw), "storage")
-            outputs["storage"] = (storage_valid,
-                                  schemas.PRIMARY_KEYS["storage"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-            sku_path = os.path.join(vroot, "storage_skus.json")
-            if os.path.exists(sku_path):
-                skus = spark.read.schema(gcp_src.RAW_STORAGE_SKU).json(sku_path)
-                v, inv = validate_items(
-                    gcp_src.gcp_storage_prices(skus, storage_valid, regions),
-                    "storage_price")
-                outputs["storage_price"] = (
-                    v, schemas.PRIMARY_KEYS["storage_price"])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-        net_path = os.path.join(vroot, "network_skus.json")
-        if os.path.exists(net_path):
-            skus = spark.read.schema(gcp_src.RAW_NETWORK_SKU).json(net_path)
-            v, inv = validate_items(
-                gcp_src.gcp_traffic_prices(skus, regions), "traffic_price")
-            outputs["traffic_price"] = (
-                v, schemas.PRIMARY_KEYS["traffic_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-        # Cloud SQL (PostgreSQL) databases + storage
-        sql_skus_path = os.path.join(vroot, "cloudsql_skus.json")
-        tiers_path = os.path.join(vroot, "sql_tiers.json")
-        if os.path.exists(sql_skus_path) and os.path.exists(tiers_path):
-            from .sources import gcp_sql
-
-            sql_skus = spark.read.schema(
-                gcp_sql.RAW_CLOUDSQL_SKU).json(sql_skus_path)
-            tiers = spark.read.schema(gcp_sql.RAW_SQL_TIER).json(tiers_path)
-            meta_path = os.path.join(vroot, "sql_metadata.json")
-            meta = (
-                spark.read.schema(gcp_sql.RAW_SQL_METADATA).json(meta_path)
-                if os.path.exists(meta_path)
-                else spark.createDataFrame(
-                    [([], None, None)], gcp_sql.RAW_SQL_METADATA)
-            )
-            srv = valid if "api_reference" in valid.columns else None
-            for table, df in {
-                "database": gcp_sql.gcp_sql_databases(
-                    tiers, meta, sql_skus, srv),
-                "database_price": gcp_sql.gcp_sql_database_prices(
-                    tiers, sql_skus, regions),
-                "database_storage": gcp_sql.gcp_sql_database_storages(
-                    sql_skus),
-                "database_storage_price":
-                    gcp_sql.gcp_sql_database_storage_prices(
-                        sql_skus, regions),
-            }.items():
-                v, inv = validate_items(df, table)
-                outputs[table] = (v, schemas.PRIMARY_KEYS[table])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    # Azure compute-resource disks + Retail Prices API pages
-    if vendor == "azure" and regions is not None:
-        from .sources import azure as az
-
-        disks_path = os.path.join(vroot, "disks.json")
-        retail_path = os.path.join(vroot, "retail_prices.json")
-        retail = (
-            spark.read.schema(az.RAW_RETAIL_PRICE).json(retail_path)
-            if os.path.exists(retail_path) else None
-        )
-        if os.path.exists(disks_path):
-            disks = spark.read.schema(az.RAW_AZURE_DISK).json(disks_path)
-            storage_valid, inv = validate_items(
-                az.azure_storage_catalog(disks), "storage")
-            outputs["storage"] = (storage_valid,
-                                  schemas.PRIMARY_KEYS["storage"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-            if retail is not None:
-                v, inv = validate_items(
-                    az.azure_storage_prices(retail, storage_valid, regions),
-                    "storage_price")
-                outputs["storage_price"] = (
-                    v, schemas.PRIMARY_KEYS["storage_price"])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-        if retail is not None:
-            v, inv = validate_items(
-                az.azure_traffic_prices(retail, regions), "traffic_price")
-            outputs["traffic_price"] = (
-                v, schemas.PRIMARY_KEYS["traffic_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-            v, inv = validate_items(
-                az.azure_ipv4_prices(retail, regions), "ipv4_price")
-            outputs["ipv4_price"] = (v, schemas.PRIMARY_KEYS["ipv4_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-        # VM server prices (ondemand + spot) fanned per zone
-        zones_path = os.path.join(vroot, "zones.json")
-        if retail is not None and os.path.exists(zones_path):
-            zone_off = spark.read.schema(
-                "region_id string, zones array<string>").json(zones_path)
-            sp = az.azure_server_prices(
-                retail, valid, regions, zone_off, "ondemand"
-            ).unionByName(az.azure_server_prices(
-                retail, valid, regions, zone_off, "spot"))
-            v, inv = validate_items(sp, "server_price")
-            outputs["server_price"] = (
-                v, schemas.PRIMARY_KEYS["server_price"])
-            invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-        # PostgreSQL Flexible Server databases + storage
-        caps_path = os.path.join(vroot, "pg_capabilities.json")
-        if os.path.exists(caps_path):
-            from .sources import azure_sql
-
-            caps = spark.read.schema(
-                azure_sql.RAW_PG_CAPABILITY).json(caps_path)
-            svc = {"database": azure_sql.azure_pg_databases(caps),
-                   "database_storage":
-                       azure_sql.azure_pg_database_storages(caps)}
-            if retail is not None:
-                svc["database_price"] = azure_sql.azure_pg_database_prices(
-                    caps, retail, regions)
-                svc["database_storage_price"] = (
-                    azure_sql.azure_pg_database_storage_prices(
-                        retail, svc["database_storage"], regions))
-            for table, df in svc.items():
-                v, inv = validate_items(df, table)
-                outputs[table] = (v, schemas.PRIMARY_KEYS[table])
-                invalid = invalid.unionByName(inv, allowMissingColumns=True)
-
-    _land_tables(spark, lake, outputs, vendor, records)
-    if invalid.limit(1).count():
-        inv_path = _table_path(lake, "server_invalid")
-        if snapshot_exists(inv_path):
-            inv = read_snapshot(spark, inv_path).unionByName(
-                invalid, allowMissingColumns=True)
-        else:
-            inv = invalid
-        _rewrite(spark, inv, inv_path)
+            sku_page = _bronze(spark, vroot, fname,
+                               cat.RAW_ALICLOUD_SERVICE_SKU)
+            if sku_page is not None:
+                inv.add(table, build(sku_page, regions))
 
 
 def cmd_sql(spark: SparkSession, lake: str, query: str,
@@ -1507,7 +1358,7 @@ def cmd_inspect(spark: SparkSession, bronze: str, lake: str,
         static_web=maybe("static_web.csv", insp.read_redis_csv),
         vcpus=lscpu,
     )
-    outputs: dict = {}
+    inv = _Inventory("benchmark_score_invalid")
     if any(v is not None for k, v in kw.items()
            if k not in ("cache", "vcpus")):
         scores = insp.inspector_benchmarks(**kw).select(
@@ -1524,14 +1375,10 @@ def cmd_inspect(spark: SparkSession, bronze: str, lake: str,
         # and last record
         from .operators.windows import keep_last_dedup
 
-        scores = keep_last_dedup(
+        inv.add("benchmark_score", keep_last_dedup(
             scores.withColumn("_pos", F.monotonically_increasing_id()),
             schemas.PRIMARY_KEYS["benchmark_score"], "_pos",
-        ).drop("_pos")
-        valid, invalid = validate_items(scores, "benchmark_score")
-        outputs["benchmark_score"] = (
-            valid, schemas.PRIMARY_KEYS["benchmark_score"])
-        outputs["benchmark_score_invalid"] = (invalid, None)
+        ).drop("_pos"))
 
     all_servers = (_read(spark, lake, "server")
                    if snapshot_exists(_table_path(lake, "server"))
@@ -1612,11 +1459,11 @@ def cmd_inspect(spark: SparkSession, bronze: str, lake: str,
               f"{read_snapshot(spark, _table_path(lake, 'server')).count()}"
               " rows")
 
-    if not outputs:
+    if not inv.tables:
         print("inspect: nothing to land (no framework files found)")
         return
     _land_tables(
-        spark, lake, outputs, vendor,
+        spark, lake, inv, vendor,
         scopes={
             # inspect re-emits the vendor's MEASURED benchmark rows;
             # workload_profile:* rows belong to cmd_score (which scopes

@@ -850,7 +850,8 @@ def upcloud_service_prices(spark: SparkSession, path: str,
             "ipv4_price": ipv4}
 
 
-def upcloud_server_prices(zone_prices: DataFrame, gpu_avail: DataFrame,
+def upcloud_server_prices(zone_prices: DataFrame,
+                          gpu_avail: DataFrame | None,
                           allocation: str = "ondemand",
                           vendor_id: str = "upcloud") -> DataFrame:
     """UpCloud zone price list -> price rows (reference _upcloud.py:
@@ -865,20 +866,22 @@ def upcloud_server_prices(zone_prices: DataFrame, gpu_avail: DataFrame,
       its spot path (:501-504), so a hypothetical ``SPOT-GPU-*`` key
       bypasses the gate in BOTH engines — parity preserved rather than
       second-guessing the vendor's key grammar;
+    - no availability report (``gpu_avail`` None) offers no GPU plan;
     - prices are cents -> EUR/hour (:469); ondemand rows carry the
       published 672-hour monthly cap as tiers (:474-483), spot rows have
       no tier list.
     """
     is_spot = F.col("plan_key").contains("SPOT")
     p = zone_prices.filter(~is_spot if allocation == "ondemand" else is_spot)
-    avail = gpu_avail.select(
-        "region_id", F.col("plan").alias("plan_key"),
-        F.col("amount").cast("int").alias("_amount"),
-    )
-    p = p.join(F.broadcast(avail), ["region_id", "plan_key"], "left").filter(
-        ~F.col("plan_key").startswith("GPU")
-        | (F.coalesce(F.col("_amount"), F.lit(0)) > 0)
-    )
+    offered = ~F.col("plan_key").startswith("GPU")
+    if gpu_avail is not None:
+        avail = gpu_avail.select(
+            "region_id", F.col("plan").alias("plan_key"),
+            F.col("amount").cast("int").alias("_amount"),
+        )
+        p = p.join(F.broadcast(avail), ["region_id", "plan_key"], "left")
+        offered = offered | (F.coalesce(F.col("_amount"), F.lit(0)) > 0)
+    p = p.filter(offered)
     price = F.col("raw_price") / 100
     tiers = (
         F.array(
@@ -1065,7 +1068,7 @@ def alicloud_traffic_prices(skus: DataFrame, regions: DataFrame,
     )
 
 
-def alicloud_server_prices(skus: DataFrame, avail: DataFrame,
+def alicloud_server_prices(skus: DataFrame, avail: DataFrame | None,
                            regions: DataFrame, zones: DataFrame | None,
                            vendor_id: str = "alicloud") -> DataFrame:
     """Alicloud SKU price list -> price rows (reference
@@ -1074,7 +1077,8 @@ def alicloud_server_prices(skus: DataFrame, avail: DataFrame,
     unknown regions dropped, rows fanned out over the region's zones,
     status ACTIVE only where DescribeAvailableResource reports
     ``WithStock`` for (region, zone, server) (:252-315) — INACTIVE
-    otherwise (the reference keeps the row, flagging availability)."""
+    otherwise (the reference keeps the row, flagging availability); with
+    no availability report (``avail`` None) every row is INACTIVE."""
     probe = _alicloud_region_probe(regions)
     s = skus.select(
         F.col("SkuFactorMap.vm_region_no").alias("vm_region_no"),
@@ -1091,11 +1095,14 @@ def alicloud_server_prices(skus: DataFrame, avail: DataFrame,
         out = out.join(F.broadcast(zdim), "region_id")
     else:
         out = out.withColumn("zone_id", F.col("region_id"))
-    stock = avail.filter(F.col("status_category") == "WithStock").select(
-        "region_id", "zone_id", "server_id", F.lit(True).alias("_avail")
-    ).distinct()
-    out = out.join(
-        F.broadcast(stock), ["region_id", "zone_id", "server_id"], "left")
+    if avail is None:
+        out = out.withColumn("_avail", F.lit(False))
+    else:
+        stock = avail.filter(F.col("status_category") == "WithStock").select(
+            "region_id", "zone_id", "server_id", F.lit(True).alias("_avail")
+        ).distinct()
+        out = out.join(
+            F.broadcast(stock), ["region_id", "zone_id", "server_id"], "left")
     return out.select(
         F.lit(vendor_id).alias("vendor_id"),
         "region_id", "zone_id", "server_id", "operating_system",

@@ -202,7 +202,7 @@ def _tier_parsed(tiers: DataFrame) -> DataFrame:
 
 
 def gcp_sql_databases(tiers: DataFrame, metadata: DataFrame,
-                      skus: DataFrame, servers: DataFrame | None,
+                      skus: DataFrame, servers: DataFrame,
                       vendor_id: str = "gcp") -> DataFrame:
     """sqladmin tiers -> ``database`` rows (inventory_databases,
     _gcp.py:1293-1412): spec-labeled description, J7-style server match
@@ -253,16 +253,13 @@ def gcp_sql_databases(tiers: DataFrame, metadata: DataFrame,
             .otherwise(F.coalesce("_ha", F.lit(False))))
         .crossJoin(F.broadcast(metadata))
     )
-    if servers is not None:
-        dim = servers.select(
-            F.col("api_reference").alias("_srv_ref"),
-            F.col("server_id").alias("_srv_id"))
-        base = base.join(
-            F.broadcast(dim),
-            F.regexp_replace(F.col("tier"), r"^db-", "") == F.col("_srv_ref"),
-            "left")
-    else:
-        base = base.withColumn("_srv_id", F.lit(None).cast("string"))
+    dim = servers.select(
+        F.col("api_reference").alias("_srv_ref"),
+        F.col("server_id").alias("_srv_id"))
+    base = base.join(
+        F.broadcast(dim),
+        F.regexp_replace(F.col("tier"), r"^db-", "") == F.col("_srv_ref"),
+        "left")
     return base.select(
         F.lit(vendor_id).alias("vendor_id"),
         F.col("tier").alias("database_id"),

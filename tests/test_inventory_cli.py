@@ -1568,18 +1568,36 @@ def test_invalid_audit_table_accumulates_across_vendors(spark, tmp_path):
     """_land_tables must APPEND pk-less audit tables: a second vendor's
     inventory run previously replaced the server_invalid snapshot,
     silently destroying the first vendor's quarantined rows."""
-    from sc_crawler_spark.cli import _land_tables
+    from sc_crawler_spark.cli import _Inventory, _land_tables
     from sc_crawler_spark.sinks.snapshot import read_snapshot
 
     lake = str(tmp_path / "lake")
-    inv_a = spark.createDataFrame(
-        [("hcloud", "cx11", "missing vcpus")],
-        "vendor_id string, server_id string, error string")
-    inv_b = spark.createDataFrame(
-        [("aws", "t0.bad", "missing memory")],
-        "vendor_id string, server_id string, error string")
-    _land_tables(spark, lake, {"server_invalid": (inv_a, None)}, "hcloud")
-    _land_tables(spark, lake, {"server_invalid": (inv_b, None)}, "aws")
+    for vendor, server_id, error in [("hcloud", "cx11", "missing vcpus"),
+                                     ("aws", "t0.bad", "missing memory")]:
+        inv = _Inventory("server_invalid")
+        inv.invalid.append(spark.createDataFrame(
+            [(vendor, server_id, error)],
+            "vendor_id string, server_id string, error string"))
+        _land_tables(spark, lake, inv, vendor)
     rows = read_snapshot(
         spark, os.path.join(lake, "server_invalid")).collect()
     assert sorted(r.vendor_id for r in rows) == ["aws", "hcloud"]
+
+
+def test_catalog_vendor_duplicate_server_lands_once(spark, tmp_path):
+    """A per-zone machine-type listing repeats a type; the shared server
+    step keeps the last arrival, so the type lands as one row, and a
+    second pull still leaves one row (merge_upsert's full-outer join
+    would fan duplicate PKs out on every pull)."""
+    bronze, lake = str(tmp_path / "bronze"), str(tmp_path / "lake")
+    os.makedirs(os.path.join(bronze, "gcp"))
+    listing = {"id": 3001, "name": "n2-standard-4", "description": "4/16",
+               "guest_cpus": 4, "memory_mb": 16384, "is_shared_cpu": False,
+               "deprecated": {"state": ""}}
+    with open(os.path.join(bronze, "gcp", "machine_types.json"), "w") as fh:
+        fh.write(json.dumps(listing) + "\n" + json.dumps(listing))
+    for _ in range(2):
+        cli.cmd_inventory(spark, bronze, lake, vendor="gcp")
+        rows = read_snapshot(spark, os.path.join(lake, "server")).collect()
+        assert [(r["vendor_id"], r["server_id"], r["status"])
+                for r in rows] == [("gcp", "3001", "active")]
