@@ -31,10 +31,9 @@ from pyspark.sql import functions as F
 
 from . import migrate, schemas
 from .operators.sync import hash_diff, with_row_hash
-from .operators.upsert import merge_upsert, scd2_append
 from .session import get_spark
-from .sinks.snapshot import (current_path, read_snapshot, snapshot_exists,
-                             write_snapshot)
+from .sinks.snapshot import (current_path, merge_snapshot, read_snapshot,
+                             snapshot_exists, write_snapshot)
 from .sources import lookup
 
 
@@ -50,7 +49,7 @@ def _tables_in(lake: str) -> list[str]:
     return sorted(
         d for d in os.listdir(lake)
         if os.path.isdir(os.path.join(lake, d))
-        and not d.startswith("_") and not d.endswith("_stage")
+        and not d.startswith("_")
     )
 
 
@@ -62,12 +61,6 @@ def _ensure_lake(lake: str) -> None:
         migrate.check_lake(lake, context="write")
     else:
         migrate.stamp_lake(lake)
-
-
-def _rewrite(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Commit ``df`` as the table's next snapshot version (atomic pointer
-    swap; the plan may read the current snapshot of ``path`` itself)."""
-    write_snapshot(spark, df, path)
 
 
 def cmd_pull(spark: SparkSession, lake: str) -> None:
@@ -105,37 +98,35 @@ def cmd_pull(spark: SparkSession, lake: str) -> None:
         canon = (canon.withColumn("status", F.lit("active"))
                  .withColumn("observed_at", F.current_timestamp()))
         path = _table_path(lake, table)
-        if snapshot_exists(path):
-            current = read_snapshot(spark, path)
-            merged = merge_upsert(
-                current, canon.select(*current.columns), pks,
-                inactivate_missing=True,
-                # region canon is aws-only: never sweep regions that
-                # other vendors' inventory runs landed
-                scope=(F.col("vendor_id") == "aws")
-                if table == "region" else None,
-            )
-        else:  # first pull: nothing to merge into
-            merged = canon
-        _rewrite(spark, merged, path)
+        merge_snapshot(
+            spark, path, canon, pks, inactivate_missing=True,
+            # region canon is aws-only: never sweep regions that
+            # other vendors' inventory runs landed
+            scope=(F.col("vendor_id") == "aws")
+            if table == "region" else None,
+        )
         print(f"pull: {table}: {read_snapshot(spark, path).count()} rows")
 
 
-def table_digest(spark: SparkSession, lake: str, table: str,
-                 buckets_hex: int = 4) -> str:
+#: leading row-hash hex chars that pick a table_digest bucket
+DIGEST_BUCKET_HEX = 4
+
+
+def table_digest(spark: SparkSession, lake: str, table: str) -> str:
     """Content digest (T3 semantics; ignores observed_at), computed fully
-    distributed: rows are bucketed by the first ``buckets_hex`` hex chars
-    of their row hash (content-based — independent of file layout, unlike
-    range-partitioner sampling), each bucket folds its sorted row hashes
-    into one sha1 JVM-side, and the driver folds only the ≤16^buckets_hex
-    bucket digests in bucket order. At 100 TB nothing row-sized ever
-    reaches the driver; raise ``buckets_hex`` to shrink per-bucket state."""
+    distributed: rows are bucketed by the first ``DIGEST_BUCKET_HEX``
+    hex chars of their row hash (content-based — independent of file
+    layout, unlike range-partitioner sampling), each bucket folds its
+    sorted row hashes into one sha1 JVM-side, and the driver folds only
+    the ≤16^DIGEST_BUCKET_HEX bucket digests in bucket order. At 100 TB
+    nothing row-sized ever reaches the driver."""
     df = _read(spark, lake, table)
     pks = schemas.PRIMARY_KEYS.get(table, df.columns[:1])
     hashed = with_row_hash(df, [c for c in pks if c in df.columns])
     parts = (
-        hashed.select(F.substring("row_sha", 1, buckets_hex).alias("b"),
-                      "row_sha")
+        hashed.select(
+            F.substring("row_sha", 1, DIGEST_BUCKET_HEX).alias("b"),
+            "row_sha")
         .groupBy("b")
         .agg(F.sha1(F.concat_ws(
             "", F.array_sort(F.collect_list("row_sha")))).alias("bucket_sha"))
@@ -186,20 +177,11 @@ def cmd_sync(spark: SparkSession, source: str, target: str,
         .withColumn("observed_at", F.current_timestamp())
     )
     apply_rows = changed_rows.unionByName(deleted_rows)
-    if scd:
-        out_table = f"{table}_scd"
-        # explicit existence check, not a blanket except: a genuine
-        # read failure must propagate rather than silently replacing
-        # the accumulated SCD history with just this sync's rows
-        if snapshot_exists(_table_path(target, out_table)):
-            hist = _read(spark, target, out_table)
-            result = scd2_append(hist, apply_rows)
-        else:  # first sync: no history yet
-            result = apply_rows
-    else:
-        out_table = table
-        result = merge_upsert(tgt, apply_rows, pks)
-    _rewrite(spark, result, _table_path(target, out_table))
+    # --scd appends the changed versions to the _scd history twin
+    # (pks + observed_at is its PK); plain sync upserts them by PK
+    out_table = f"{table}_scd" if scd else table
+    merge_snapshot(spark, _table_path(target, out_table), apply_rows,
+                   None if scd else pks)
     # the sync is done — release the cached diff (a long-lived service
     # leaks otherwise)
     spark.catalog.clearCache()
@@ -579,27 +561,14 @@ def _land_tables(spark: SparkSession, lake: str, inv: _Inventory,
         lambda a, b: a.unionByName(b, allowMissingColumns=True), inv.invalid)
     for table, df in outputs.items():
         path = _table_path(lake, table)
-        pks = schemas.PRIMARY_KEYS.get(table)
-        # explicit existence gate, never a blanket except: a genuine
-        # read/merge failure must propagate — swallowing it would land
-        # ONLY this vendor's rows and silently wipe every other
-        # vendor's data from the table
-        if snapshot_exists(path):
-            current = read_snapshot(spark, path)
-            if pks:
-                scope = (scopes or {}).get(
-                    table,
-                    # per-vendor pull: never sweep other vendors' rows
-                    F.col("vendor_id") == vendor
-                    if "vendor_id" in current.columns else None,
-                )
-                df = merge_upsert(
-                    current, df.select(*current.columns), pks,
-                    inactivate_missing=True, scope=scope,
-                )
-            else:
-                df = current.unionByName(df, allowMissingColumns=True)
-        _rewrite(spark, df, path)
+        scope = (scopes or {}).get(
+            table,
+            # per-vendor pull: never sweep other vendors' rows
+            F.col("vendor_id") == vendor if "vendor_id" in df.columns
+            else None,
+        )
+        merge_snapshot(spark, path, df, schemas.PRIMARY_KEYS.get(table),
+                       inactivate_missing=True, scope=scope)
         print(f"inventory: {table}: {read_snapshot(spark, path).count()} rows")
 
 
@@ -862,16 +831,15 @@ def cmd_sql(spark: SparkSession, lake: str, query: str,
     query language; this is where a Spark-native engine naturally
     exceeds it). Results print as TSV to stdout, or land as parquet
     with ``--out``."""
-    # _tables_in excludes _stage recovery dirs; a table that fails to
-    # read (corrupted pointer) must RAISE, not silently vanish from the
-    # registered views — the query would otherwise "succeed" against a
-    # partial lake
+    # a table that fails to read (no or corrupted pointer) must RAISE,
+    # not silently vanish from the registered views — the query would
+    # otherwise "succeed" against a partial lake
     for t in _tables_in(lake):
         read_snapshot(spark, _table_path(lake, t)).createOrReplaceTempView(t)
     df = spark.sql(query)
     if out:
         df.write.mode("overwrite").parquet(out)
-        print(f"sql: wrote {read_snapshot(spark, out).count()} rows to {out}")
+        print(f"sql: wrote {spark.read.parquet(out).count()} rows to {out}")
         return
     cols = df.columns
     print("\t".join(cols))
@@ -891,9 +859,7 @@ def cmd_compact(spark: SparkSession, lake: str, table: str | None = None,
     bin-packing step every table format needs at 100 TB — expressed
     against the snapshot log, so readers never see a half-compacted
     table."""
-    # _tables_in excludes _stage recovery dirs (compacting one would
-    # write v-*/pointer machinery INTO the staged copy a crashed
-    # incremental merge needs for recovery); unreadable tables raise
+    # unreadable tables raise
     tables = [table] if table else _tables_in(lake)
     for t in tables:
         root = _table_path(lake, t)
@@ -922,7 +888,6 @@ def cmd_score(spark: SparkSession, lake: str) -> None:
     (workload_profile_scores.py:403-443): existing workload_profile:*
     rows not re-emitted flip inactive, fresh rows upsert; raw scores
     (and prior workload rows, avoiding circularity) are the input."""
-    from .operators.upsert import merge_upsert
     from .operators.validate import validate_items
     from .workloads import workload_score_rows
 
@@ -931,20 +896,17 @@ def cmd_score(spark: SparkSession, lake: str) -> None:
         print("score: no benchmark_score table in the lake "
               "(run inventory/inspect first)")
         return
-    current = read_snapshot(spark, path)
-    raw = current.filter(
+    raw = read_snapshot(spark, path).filter(
         (F.col("status") == "active")
         & ~F.col("benchmark_id").startswith("workload_profile:")
     ).select("vendor_id", "server_id", "benchmark_id", "config", "score")
     rows = workload_score_rows(spark, raw)
     valid, _invalid = validate_items(rows, "benchmark_score")
-    merged = merge_upsert(
-        current, valid.select(*current.columns),
-        schemas.PRIMARY_KEYS["benchmark_score"],
+    merge_snapshot(
+        spark, path, valid, schemas.PRIMARY_KEYS["benchmark_score"],
         inactivate_missing=True,
         scope=F.col("benchmark_id").startswith("workload_profile:"),
     )
-    _rewrite(spark, merged, path)
     # the snapshot is written — release the `best` frame workloads
     # cached for this scoring pass (otherwise each cmd_score in a
     # long-lived session pins another executor-storage entry forever)
@@ -1454,7 +1416,7 @@ def cmd_inspect(spark: SparkSession, bronze: str, lake: str,
         kept = servers.join(valid_srv.select(*pks), pks, "left_anti")
         out = others.unionByName(valid_srv.select(*all_servers.columns)
                                  ).unionByName(kept)
-        _rewrite(spark, out, _table_path(lake, "server"))
+        write_snapshot(spark, out, _table_path(lake, "server"))
         print(f"inspect: server: enriched "
               f"{read_snapshot(spark, _table_path(lake, 'server')).count()}"
               " rows")

@@ -30,8 +30,7 @@ def with_row_hash(df: DataFrame, pks: list[str],
 
 
 def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
-              ignored: tuple[str, ...] = ("observed_at",),
-              cache: bool = True) -> DataFrame:
+              ignored: tuple[str, ...] = ("observed_at",)) -> DataFrame:
     """Return source/target rows classified with an ``action`` column
     (new | update | deleted). Projection keeps (pks, action).
 
@@ -42,13 +41,8 @@ def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
     that reads both sides three times. At 100 TB with both tables
     bucketed on the PK the single join is shuffle-free.
 
-    Cache contract: with ``cache=True`` (default) the two narrow
-    (pks, hash) projections persist for the SESSION — repeated
-    consumers (sync stats + changed/deleted re-fetch) skip the
-    scan+hash stage, but the entries stay in the cache manager until
-    ``spark.catalog.clearCache()`` (cmd_sync does this when finished)
-    or session end. Long-lived services diffing many tables should
-    pass ``cache=False`` or clear between tables.
+    Nothing is cached here: a caller with several consumers of the
+    diff caches the narrow result itself (cmd_sync does).
     """
     if not pks:
         # a key-less full-outer join degenerates to a cartesian product
@@ -62,8 +56,6 @@ def hash_diff(source: DataFrame, target: DataFrame, pks: list[str],
         *pks, F.col("row_sha").alias("_s_sha"))
     t = with_row_hash(target, pks, ignored).select(
         *pks, F.col("row_sha").alias("_t_sha"))
-    if cache:
-        s, t = s.cache(), t.cache()
     # full-outer can't broadcast; hint the hash variant so neither side
     # pays a sort — per-partition hash build on the (pks, sha) projection
     # is small and spill-safe at any shuffle-partition count

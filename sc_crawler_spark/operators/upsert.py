@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 def merge_upsert(current: DataFrame, updates: DataFrame, pks: list[str],
                  inactivate_missing: bool = False,
-                 scope: Column | DataFrame | None = None,
-                 updates_position: str | None = None) -> DataFrame:
+                 scope: Column | DataFrame | None = None) -> DataFrame:
     """Upsert ``updates`` into ``current`` by PK.
 
     - matched PK       -> take the update row (ON CONFLICT DO UPDATE,
@@ -34,10 +33,9 @@ def merge_upsert(current: DataFrame, updates: DataFrame, pks: list[str],
     the snapshot (the reference's ON CONFLICT collapses them in list
     order instead). Sources that can emit duplicates (retried pages,
     overlapping API scans) must dedupe first: stamp an arrival-position
-    column at ingest and either call ``keep_last_dedup`` (the inventory
-    paths do) or pass it as ``updates_position`` and this operator
-    keeps the last arrival per PK — the reference's list-order
-    semantics (insert.py:24-72).
+    column at ingest and call ``keep_last_dedup`` (the inventory paths
+    do), which keeps the last arrival per PK — the reference's
+    list-order semantics (insert.py:24-72).
 
     ``scope`` bounds the inactivation sweep the way the reference bounds
     its per-vendor UPDATE (tables.py:224-283): a boolean ``Column`` over
@@ -49,10 +47,6 @@ def merge_upsert(current: DataFrame, updates: DataFrame, pks: list[str],
     Single shuffle on the PK; both inputs should share partitioning on the
     PK at scale (bucketed silver tables) so the join is co-located.
     """
-    if updates_position is not None:
-        from .windows import keep_last_dedup
-
-        updates = keep_last_dedup(updates, pks, updates_position)
     cols = current.columns
     in_scope: Column | None = None
     if inactivate_missing and scope is not None:
@@ -95,8 +89,10 @@ def merge_upsert(current: DataFrame, updates: DataFrame, pks: list[str],
 
 def scd2_append(history: DataFrame, changed: DataFrame) -> DataFrame:
     """SCD Type 2: append changed version rows; (pks + observed_at) is the
-    history PK so this is a pure union (tables_scd.py:45-53)."""
-    return history.unionByName(changed.select(*history.columns))
+    history PK so this is a pure union (tables_scd.py:45-53). Columns
+    match by name; one side's missing columns read as NULL (the audit
+    tables union invalid rows of differing shapes)."""
+    return history.unionByName(changed, allowMissingColumns=True)
 
 
 def set_status_inactive(df: DataFrame, predicate) -> DataFrame:

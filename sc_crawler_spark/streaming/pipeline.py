@@ -500,24 +500,15 @@ def stream_keep_last_upsert(events: DataFrame, state_dir: str,
     merge_upsert against the stored snapshot (K1). Returns the streaming
     query (caller awaits/stops it).
     """
-    from ..operators.upsert import merge_upsert
     from ..operators.windows import keep_last_dedup
-    from ..sinks.snapshot import read_snapshot, snapshot_exists, write_snapshot
+    from ..sinks.snapshot import merge_snapshot
 
     def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        deduped = keep_last_dedup(batch, pks, order_col)
-        if snapshot_exists(state_dir):
-            # real read/merge failures propagate so the batch retries —
-            # a broad except would silently reset the state table
-            current = read_snapshot(spark, state_dir)
-            merged = merge_upsert(current, deduped.select(*current.columns), pks)
-        else:  # first batch: no snapshot yet
-            merged = deduped
         # versioned write + atomic pointer swap: a crash mid-write leaves
         # the previous committed snapshot intact, so the checkpoint's
         # replayed batch merges against complete state, never a truncation
-        write_snapshot(spark, merged, state_dir)
+        merge_snapshot(batch.sparkSession, state_dir,
+                       keep_last_dedup(batch, pks, order_col), pks)
 
     return (
         events.writeStream.foreachBatch(_apply)
@@ -595,6 +586,57 @@ def _fold_guard(batch: DataFrame, batch_id: int, state_dir: str,
     return batch, manifest
 
 
+def _merge_add_fold(events: DataFrame, state_dir: str,
+                    checkpoint_dir: str, keys: list[str], partial):
+    """Start the replay-safe merge-ADD fold of ``events`` into the
+    snapshot at ``state_dir``. Each micro-batch's ``partial(batch)``
+    (``keys`` plus additive columns) full-outer joins the stored cells
+    on ``keys`` and adds. The ``_fold_guard`` manifest commits in the
+    same pointer swap as the cells. Returns the streaming query (caller
+    awaits)."""
+    import json
+
+    from ..sinks.snapshot import read_snapshot, snapshot_exists, write_snapshot
+
+    def _apply(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        manifest = None
+        # existence check, not try/except: a transient read failure on
+        # batch N>1 must surface (and be retried by the stream), never
+        # be mistaken for "first batch" and truncate the state
+        first = not snapshot_exists(state_dir)
+        if not first:
+            cur = read_snapshot(spark, state_dir)
+            batch, manifest = _fold_guard(batch, batch_id, state_dir, cur)
+            if batch is None:
+                return  # replayed input: already folded in
+        elif batch.inputFiles():
+            manifest = json.dumps(sorted(set(batch.inputFiles())))
+        state = partial(batch)  # the first batch's partial IS the state
+        if not first:
+            adds = [c for c in state.columns if c not in keys]
+            zero = {c: F.lit(0).cast(cur.schema[c].dataType) for c in adds}
+            state = (
+                cur.join(state.select(*keys, *[F.col(c).alias(f"_d_{c}")
+                                               for c in adds]),
+                         keys, "full_outer")
+                .select(*keys, *[(F.coalesce(F.col(c), zero[c])
+                                  + F.coalesce(F.col(f"_d_{c}"), zero[c]))
+                                 .alias(c) for c in adds])
+            )
+        write_snapshot(
+            spark, state.withColumn("_last_batch_id", F.lit(batch_id)),
+            state_dir,
+            extras={FOLD_MANIFEST: manifest} if manifest else None)
+
+    return (
+        events.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def incremental_daily_rollup(events: DataFrame, state_dir: str,
                              checkpoint_dir: str):
     """Continuous aggregate (hypertable-rollup style): a (day,
@@ -616,61 +658,15 @@ def incremental_daily_rollup(events: DataFrame, state_dir: str,
     IN the snapshot version directory, so cells and guard commit in
     one pointer swap — there is no window where one is updated without
     the other. Returns the streaming query (caller awaits)."""
-    import json
-    import os
-
-    from ..sinks.snapshot import POINTER, read_snapshot, write_snapshot
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        manifest = None
-        # existence check, not try/except: a transient read failure on
-        # batch N>1 must surface (and be retried by the stream), never
-        # be mistaken for "first batch" and truncate the rollup
-        first = not os.path.exists(os.path.join(state_dir, POINTER))
-        if not first:
-            cur = read_snapshot(spark, state_dir)
-            batch, manifest = _fold_guard(batch, batch_id, state_dir, cur)
-            if batch is None:
-                return  # replayed input: already folded in
-        elif batch.inputFiles():
-            manifest = json.dumps(sorted(set(batch.inputFiles())))
-        delta = batch.groupBy(
+    return _merge_add_fold(
+        events, state_dir, checkpoint_dir, ["wstart", "event_type"],
+        lambda batch: batch.groupBy(
             F.date_trunc("DAY", F.col("ts")).alias("wstart"),
             F.col("event_type"),
         ).agg(
             F.count("*").alias("n_events"),
             F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_value"),
-        )
-        if not first:
-            merged = (
-                cur.join(delta.withColumnRenamed("n_events", "_n")
-                         .withColumnRenamed("sum_value", "_s"),
-                         ["wstart", "event_type"], "full_outer")
-                .select(
-                    "wstart", "event_type",
-                    (F.coalesce("n_events", F.lit(0))
-                     + F.coalesce("_n", F.lit(0))).alias("n_events"),
-                    (F.coalesce(F.col("sum_value"),
-                                F.lit(0).cast("decimal(28,6)"))
-                     + F.coalesce(F.col("_s"),
-                                  F.lit(0).cast("decimal(28,6)")))
-                    .alias("sum_value"),
-                )
-            )
-        else:  # first batch: the delta IS the rollup
-            merged = delta
-        write_snapshot(
-            spark, merged.withColumn("_last_batch_id", F.lit(batch_id)),
-            state_dir,
-            extras={FOLD_MANIFEST: manifest} if manifest else None)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+        ))
 
 
 def stream_lr_quality_gate(docs: DataFrame, weights: dict) -> DataFrame:
@@ -770,46 +766,11 @@ def streaming_cms_sketch(events: DataFrame, state_dir: str,
     a grown source folds only the unseen files instead of silently
     dropping them behind the old batch-id marker) in the same atomic
     pointer swap as the cells."""
-    import json
-    import os
-
     from ..operators.sketch import cms_partial
-    from ..sinks.snapshot import POINTER, read_snapshot, write_snapshot
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        manifest = None
-        first = not os.path.exists(os.path.join(state_dir, POINTER))
-        if not first:
-            cur = read_snapshot(spark, state_dir)
-            batch, manifest = _fold_guard(batch, batch_id, state_dir, cur)
-            if batch is None:
-                return  # replayed input: already folded in
-        elif batch.inputFiles():
-            manifest = json.dumps(sorted(set(batch.inputFiles())))
-        delta = cms_partial(batch, key_col)
-        if not first:
-            merged = (
-                cur.join(delta.withColumnRenamed("cnt", "_c"),
-                         ["row", "cell"], "full_outer")
-                .select(
-                    "row", "cell",
-                    (F.coalesce("cnt", F.lit(0))
-                     + F.coalesce("_c", F.lit(0))).alias("cnt"))
-            )
-        else:
-            merged = delta
-        write_snapshot(
-            spark, merged.withColumn("_last_batch_id", F.lit(batch_id)),
-            state_dir,
-            extras={FOLD_MANIFEST: manifest} if manifest else None)
-
-    return (
-        events.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _merge_add_fold(events, state_dir, checkpoint_dir,
+                           ["row", "cell"],
+                           lambda batch: cms_partial(batch, key_col))
 
 
 def stateful_best_scores_tws(events: DataFrame) -> DataFrame:
@@ -892,10 +853,9 @@ def stream_server_inventory(spark: SparkSession, bronze_dir: str,
     audit-trail contract as the batch inventory path; a fully-invalid
     drop file must not stream through as a silent no-op.
     """
-    from ..operators.upsert import merge_upsert
     from ..operators.validate import validate_items
     from ..operators.windows import keep_last_dedup
-    from ..sinks.snapshot import read_snapshot, snapshot_exists, write_snapshot
+    from ..sinks.snapshot import merge_snapshot
     from ..sources import aws
 
     raw = spark.readStream.schema(aws.RAW_INSTANCE_TYPE).json(bronze_dir)
@@ -911,26 +871,11 @@ def stream_server_inventory(spark: SparkSession, bronze_dir: str,
             servers, ["vendor_id", "server_id"], "_pos").drop("_pos")
         valid, invalid = validate_items(servers, "server")
         if invalid.limit(1).count():
-            inv_dir = state_dir.rstrip("/") + "_invalid"
-            if snapshot_exists(inv_dir):
-                invalid = read_snapshot(bspark, inv_dir).unionByName(
-                    invalid, allowMissingColumns=True)
-            write_snapshot(bspark, invalid, inv_dir)
-        if snapshot_exists(state_dir):
-            # genuine read/merge failures must PROPAGATE so the batch
-            # retries — a broad except here would silently reset the
-            # accumulated state table to just the current batch
-            current = read_snapshot(bspark, state_dir)
-            merged = merge_upsert(
-                current, valid.select(*current.columns),
-                ["vendor_id", "server_id"],
-                inactivate_missing=False,  # a drop file is incremental,
-                # not a full catalog — no sweep (the batch `inventory`
-                # command owns full-pull inactivation)
-            )
-        else:  # first batch: no snapshot yet
-            merged = valid
-        write_snapshot(bspark, merged, state_dir)
+            merge_snapshot(bspark, state_dir.rstrip("/") + "_invalid",
+                           invalid, None)
+        # a drop file is incremental, not a full catalog — no sweep (the
+        # batch `inventory` command owns full-pull inactivation)
+        merge_snapshot(bspark, state_dir, valid, ["vendor_id", "server_id"])
 
     return (
         raw.writeStream.foreachBatch(_apply)

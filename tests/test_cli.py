@@ -81,12 +81,7 @@ def test_pull_hash_sync_dump_copy_roundtrip(spark, tmp_path, capsys):
 
 def test_snapshot_exists_recognizes_every_readable_layout(spark, tmp_path):
     """snapshot_exists gates 'merge into existing state vs start
-    fresh' (streaming inventory): it must say True for EVERYTHING
-    spark.read.parquet would read — versioned roots, flat part files,
-    and partitioned legacy layouts with nested part files — else a
-    readable state table gets silently reset to the current batch."""
-    import os
-
+    fresh': True exactly when a pointer names a committed version."""
     from sc_crawler_spark.sinks.snapshot import snapshot_exists
 
     df = spark.range(3).selectExpr("id", "id % 2 AS k")
@@ -97,25 +92,16 @@ def test_snapshot_exists_recognizes_every_readable_layout(spark, tmp_path):
     # versioned snapshot (pointer file)
     write_snapshot(spark, df, str(tmp_path / "versioned"))
     assert snapshot_exists(str(tmp_path / "versioned"))
-    # legacy flat parquet dir
-    df.write.parquet(str(tmp_path / "flat"))
-    assert snapshot_exists(str(tmp_path / "flat"))
-    # legacy PARTITIONED dir: part files only under k=.../ subdirs
-    df.write.partitionBy("k").parquet(str(tmp_path / "parts"))
-    assert not any(f.endswith(".parquet")
-                   for f in os.listdir(tmp_path / "parts"))
-    assert snapshot_exists(str(tmp_path / "parts"))
-    # crash during the FIRST versioned commit: an uncommitted v-* dir
-    # with data but NO pointer. read_snapshot treats it as garbage
-    # (reads only root-level files, of which there are none), so
-    # snapshot_exists must say False — True would send the caller into
-    # a read that finds nothing (or worse, uncommitted data).
+    # crash during the FIRST commit: an uncommitted v-* dir with data
+    # but NO pointer reads as absent — True would send the caller into
+    # a read of uncommitted data
     (tmp_path / "crashed").mkdir()
     df.write.parquet(str(tmp_path / "crashed" / "v-00000001"))
     assert not snapshot_exists(str(tmp_path / "crashed"))
-    # ...but once a pointer commits, the same layout reads fine
-    (tmp_path / "crashed" / "_CURRENT").write_text("v-00000001")
+    # ...and the next write lands over it
+    write_snapshot(spark, df.filter("id < 2"), str(tmp_path / "crashed"))
     assert snapshot_exists(str(tmp_path / "crashed"))
+    assert read_snapshot(spark, str(tmp_path / "crashed")).count() == 2
 
 
 def test_snapshot_atomic_swap_survives_garbage(spark, tmp_path):
@@ -133,26 +119,6 @@ def test_snapshot_atomic_swap_survives_garbage(spark, tmp_path):
     # next commit supersedes the junk version number and stays readable
     write_snapshot(spark, df.filter("k < 5"), root)
     assert read_snapshot(spark, root).count() == 5
-
-
-def test_legacy_migration_crash_keeps_flat_root_readable(spark, tmp_path):
-    """ADVICE r2 (snapshot.py): a crash during the FIRST versioned commit
-    over a legacy flat-parquet root leaves a v-* dir with data but no
-    pointer. The flat root must stay readable (only root-level files),
-    and the next commit must complete the migration."""
-    root = str(tmp_path / "legacy")
-    df = spark.range(7).withColumnRenamed("id", "k")
-    df.coalesce(1).write.mode("overwrite").parquet(root)   # legacy layout
-    assert read_snapshot(spark, root).count() == 7
-
-    # crash simulation: version dir fully written, pointer never landed
-    crashed = spark.range(3).withColumnRenamed("id", "k")
-    crashed.coalesce(1).write.parquet(os.path.join(root, "v-00000001"))
-    assert read_snapshot(spark, root).count() == 7  # still the old data
-
-    # re-running the commit migrates cleanly
-    write_snapshot(spark, df.filter("k < 4"), root)
-    assert read_snapshot(spark, root).count() == 4
 
 
 def test_metadata_get_set_roundtrip(tmp_path, capsys, monkeypatch):
@@ -359,24 +325,32 @@ def test_retention_counts_committed_versions_only(spark, tmp_path):
     assert read_snapshot(spark, root, version="v-00000001").count() == 6
 
 
-def test_partitioned_legacy_with_crashed_commit_reads_clean(spark, tmp_path):
-    """A PARTITIONED legacy root (key=... dirs, no root-level part
-    files) plus an uncommitted v-* dir: read_snapshot must read only
-    the legacy partitions (with partition columns intact), matching
-    what snapshot_exists promises."""
-    from sc_crawler_spark.sinks.snapshot import snapshot_exists
+def test_pointerless_parquet_root_is_refused(spark, tmp_path):
+    """The pointer is the table: a root holding plain parquet (flat part
+    files or key=... partitions, with or without a crashed first
+    commit's v-* dir) and no pointer is not read as a table, and no
+    write or merge sweeps it — every call raises and the files stay."""
+    import re
 
-    root = str(tmp_path / "parts")
+    import pytest
+
+    from sc_crawler_spark.sinks.snapshot import merge_snapshot
+
     df = spark.range(8).selectExpr("id AS k", "id % 2 AS part")
-    df.write.partitionBy("part").parquet(root)
-    # crashed first versioned commit
-    df.limit(2).coalesce(1).write.parquet(os.path.join(root, "v-00000001"))
-    assert snapshot_exists(root)
-    got = read_snapshot(spark, root)
-    assert got.count() == 8
-    assert "part" in got.columns          # partition column still parses
-    assert sorted(r.part for r in got.select("part").distinct().collect()) \
-        == [0, 1]
+    flat, parts = str(tmp_path / "flat"), str(tmp_path / "parts")
+    df.coalesce(1).write.parquet(flat)
+    df.write.partitionBy("part").parquet(parts)
+    df.limit(2).coalesce(1).write.parquet(os.path.join(parts, "v-00000001"))
+    for root in (flat, parts):
+        before = sorted(os.walk(root))
+        with pytest.raises(FileNotFoundError, match=re.escape(root)):
+            read_snapshot(spark, root)
+        with pytest.raises(ValueError, match="not a snapshot table"):
+            write_snapshot(spark, df, root)
+        for pks in (["k"], None):
+            with pytest.raises(ValueError, match="not a snapshot table"):
+                merge_snapshot(spark, root, df, pks)
+        assert sorted(os.walk(root)) == before
 
 
 def test_dump_per_row_overwrites_and_refuses_collisions(spark, tmp_path):

@@ -314,6 +314,19 @@ def test_hash_diff_classification(spark):
     assert out == {"a": "new", "c": "update", "d": "deleted"}
 
 
+def test_hash_diff_sync_leaves_no_cached_data(spark):
+    """hash_diff caches nothing: a registry run of hash_diff_sync leaves
+    the session's cache manager as empty as it found it (a cached
+    projection would stay pinned for the session)."""
+    from sc_crawler_spark.queries import REGISTRY
+
+    from .conftest import SF_SMOKE
+
+    spark.catalog.clearCache()
+    REGISTRY["hash_diff_sync"][0](spark, SF_SMOKE).count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_row_hash_null_vs_empty(spark):
     df = spark.createDataFrame([("k", None), ("k", "")], ["pk", "v"])
     hashes = [r.h for r in df.select(row_hash(["v"]).alias("h")).collect()]

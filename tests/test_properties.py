@@ -391,7 +391,7 @@ def test_merge_upsert_updates_position_keeps_last(spark):
         "k int, v string, pos int")
     out = merge_upsert(cur, dup.drop("pos"), ["k"])  # no dedup: fans out
     assert sorted(r.k for r in out.collect()) == [1, 1, 2]
-    out2 = merge_upsert(cur, dup, ["k"], updates_position="pos")
+    out2 = merge_upsert(cur, keep_last_dedup(dup, ["k"], "pos"), ["k"])
     got = {r.k: r.v for r in out2.collect()}
     assert got == {1: "second", 2: "only"}
 
