@@ -325,32 +325,45 @@ def test_retention_counts_committed_versions_only(spark, tmp_path):
     assert read_snapshot(spark, root, version="v-00000001").count() == 6
 
 
-def test_pointerless_parquet_root_is_refused(spark, tmp_path):
-    """The pointer is the table: a root holding plain parquet (flat part
-    files or key=... partitions, with or without a crashed first
-    commit's v-* dir) and no pointer is not read as a table, and no
-    write or merge sweeps it — every call raises and the files stay."""
+def _assert_pointerless_root_refused(spark, root, df):
+    """Every read, write and merge of a root without a pointer raises,
+    and none of them touches its files."""
     import re
 
     import pytest
 
     from sc_crawler_spark.sinks.snapshot import merge_snapshot
 
-    df = spark.range(8).selectExpr("id AS k", "id % 2 AS part")
-    flat, parts = str(tmp_path / "flat"), str(tmp_path / "parts")
-    df.coalesce(1).write.parquet(flat)
-    df.write.partitionBy("part").parquet(parts)
-    df.limit(2).coalesce(1).write.parquet(os.path.join(parts, "v-00000001"))
-    for root in (flat, parts):
-        before = sorted(os.walk(root))
-        with pytest.raises(FileNotFoundError, match=re.escape(root)):
-            read_snapshot(spark, root)
+    before = sorted(os.walk(root))
+    with pytest.raises(FileNotFoundError, match=re.escape(root)):
+        read_snapshot(spark, root)
+    with pytest.raises(ValueError, match="not a snapshot table"):
+        write_snapshot(spark, df, root)
+    for pks in (["k"], None):
         with pytest.raises(ValueError, match="not a snapshot table"):
-            write_snapshot(spark, df, root)
-        for pks in (["k"], None):
-            with pytest.raises(ValueError, match="not a snapshot table"):
-                merge_snapshot(spark, root, df, pks)
-        assert sorted(os.walk(root)) == before
+            merge_snapshot(spark, root, df, pks)
+    assert sorted(os.walk(root)) == before
+
+
+def test_pointerless_flat_root_is_refused(spark, tmp_path):
+    """The pointer is the table: a root holding flat parquet part files,
+    plus a crashed first commit's v-* dir, and no pointer is not read
+    as a table, and no write or merge sweeps it."""
+    df = spark.range(8).selectExpr("id AS k", "id % 2 AS part")
+    root = str(tmp_path / "flat")
+    df.coalesce(1).write.parquet(root)
+    df.limit(3).coalesce(1).write.parquet(os.path.join(root, "v-00000001"))
+    _assert_pointerless_root_refused(spark, root, df)
+
+
+def test_pointerless_partitioned_root_is_refused(spark, tmp_path):
+    """As above for a root of key=... partitions plus a crashed first
+    commit's v-* dir: refused, and the partitions stay."""
+    df = spark.range(8).selectExpr("id AS k", "id % 2 AS part")
+    root = str(tmp_path / "parts")
+    df.write.partitionBy("part").parquet(root)
+    df.limit(2).coalesce(1).write.parquet(os.path.join(root, "v-00000001"))
+    _assert_pointerless_root_refused(spark, root, df)
 
 
 def test_dump_per_row_overwrites_and_refuses_collisions(spark, tmp_path):
